@@ -218,7 +218,7 @@ object Bench {
     // number = 1 + the highest driver-written BENCH_rN.json present (the
     // driver writes this round's copy only after this JVM exits); the cpu
     // count is in the name so the 32- and 8-core driver runs don't clobber
-    // each other. RoundArtifacts' BENCH_r* glob commits it mechanically.
+    // each other.
     locally {
       val rx = "BENCH_r([0-9]+)\\.json".r
       val maxN = Option(new java.io.File(".").listFiles()).toSeq.flatten
@@ -255,17 +255,6 @@ object Bench {
     }
     println(s"""{"metric":"total","value":$total,"unit":"sec","load":{"before":$loadBefore,"after":$loadAfter},"ratio_min":$ratioMin,"ratio_median":$ratioMedian,"n_queries":${results.size},"queries":${compactQs._1},"queries_elided":${results.size - compactQs._2},"full":"bench_last.json","errors":$errs,"sf":"$sfDir","total_sec":$total}""")
     spark.stop()
-    // mechanical round-artifact tracking (VERDICT r16 #1): bench_last.json
-    // (just written, same numbers as the driver's BENCH_rN.json) plus any
-    // driver-written CORRECTNESS/BENCH/LEAKCHECK files present by now. A
-    // FAILED run commits with an explicit failure marker (ADVICE r17) so
-    // a broken run's numbers are never mistaken for round evidence, and
-    // the detached watcher catches the files the driver writes AFTER this
-    // JVM exits (VERDICT r17 #1).
-    graft.tools.RoundArtifacts.commit(message =
-      if (errors.isEmpty) "Track round artifacts (bench/verify/leakcheck outputs)"
-      else s"Track round artifacts (bench FAILED: ${errors.size} errored: ${errors.keys.toSeq.sorted.mkString(", ").take(120)})")
-    graft.tools.RoundArtifacts.spawnDelayedWatcher()
     if (errors.nonEmpty) {
       System.err.println(s"BENCH FAILED: ${errors.size} quer${if (errors.size == 1) "y" else "ies"} errored: ${errors.keys.mkString(", ")}")
       sys.exit(1)

@@ -127,8 +127,7 @@ object ExtQueries {
       .as[Multimodal.MediaRow]
     val emb = Multimodal.embed(media).toDF()
     Similarity.cosineLshPairs(emb, "id", "embedding", minCos = 0.99,
-      bits = 512, bands = 32, center = true,
-      checkpoint = Some(graft.ext.CheckpointStrategy.Local))
+      bits = 512, bands = 32, center = true)
   }
 
   val all: Map[String, Q] = Map(

@@ -45,12 +45,5 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    // mechanical round-artifact tracking (VERDICT r16 #1): sweep up any
-    // driver-written artifacts from the PREVIOUS invocation, and spawn
-    // the detached watcher for the ones the driver writes AFTER this JVM
-    // exits (this run's CORRECTNESS_rN.json lands ~seconds later; the
-    // watcher and Bench's exit hook both catch it — VERDICT r17 #1)
-    graft.tools.RoundArtifacts.commit()
-    graft.tools.RoundArtifacts.spawnDelayedWatcher()
   }
 }

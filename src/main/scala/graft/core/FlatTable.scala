@@ -48,7 +48,7 @@ final case class FlatTable(df: DataFrame, meta: TableMeta) {
     * let a benchmark's timed run serve its own warmup's cache, measured
     * and rejected in r16). The checkpoint's known trade is executor-local
     * blocks: on a real cluster a lost executor fails the one presentation
-    * query, which re-runs — the `CheckpointStrategy.Local` posture, and
+    * query, which re-runs — the executor-local checkpoint posture, and
     * display-layer queries are the cheapest in the engine to retry. Lazy
     * per-instance cache, so back-to-back margin ops on the same table
     * share one materialization; blocks are freed by the ContextCleaner

@@ -163,8 +163,7 @@ object Audit {
     * the block straddling rank k: cum_tokens(k) = tokens_above +
     * (k − types_above)·count. */
   def vocabCoverage(df: DataFrame, textCol: String, ks: Seq[Long],
-                    tokenizer: Column => Column = TextStats.tokens,
-                    checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                    tokenizer: Column => Column = TextStats.tokens): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1L),
       s"ks must be non-empty and >= 1, got $ks")
     val spark = df.sparkSession
@@ -179,12 +178,12 @@ object Audit {
       // unique descending-count order key for the two-phase cumsum
       .withColumn("__ord", struct((-col("__c")).as("c")))
     val cum = Corpus.prefixSum(
-        Corpus.prefixSum(blocks, "__ord", "n_types", "cum_types", checkpoint),
-        "__ord", "toks_in", "cum_toks", checkpoint)
+        Corpus.prefixSum(blocks, "__ord", "n_types", "cum_types"),
+        "__ord", "toks_in", "cum_toks")
       .withColumn("types_above", col("cum_types") - col("n_types"))
       .withColumn("tokens_above", col("cum_toks") - col("toks_in"))
     // two consumers (totals + the k join) — one materialization
-    val cumM = CheckpointStrategy.materializer(checkpoint)(cum)
+    val cumM = Checkpoint.materialize(cum)
     val tot = cumM.agg(max(col("cum_types")).as("types_total"),
       max(col("cum_toks")).as("tokens_total"))
     val kj = ks.toDF("k").crossJoin(broadcast(tot))
@@ -220,8 +219,7 @@ object Audit {
     * shingle. `idCol` must identify documents uniquely (the operator's
     * one-row-per-document contract). */
   def noveltyScore(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = 8,
-                   checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                   k: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // token array materialized first (HOF-no-CSE: the shingle transform's
     // element_at calls would each re-run the split). OPT r20: ONE corpus
@@ -232,7 +230,7 @@ object Audit {
     // `.distinct()` shuffle was a no-op for unique document ids — which
     // `idCol` must be (one novelty row per document is the contract; a
     // duplicated id would double-count its own shingles as corpus-shared).
-    val docGrams = CheckpointStrategy.materializer(checkpoint)(df
+    val docGrams = Checkpoint.materialize(df
       .select(col(idCol).as("id"),
         TextStats.tokens(coalesce(col(textCol), lit(""))).as("__t"))
       .select(col("id"),
@@ -273,15 +271,14 @@ object Audit {
     * partial-combines to source² rows per task before the final tiny
     * shuffle. Two corpus-sized shuffles total (the join's two sides). */
   def sourceOverlapMatrix(df: DataFrame, textCol: String, sourceCol: String,
-                          k: Int = 8,
-                          checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                          k: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // OPT r19: the distinct (source, gram) posting table feeds three
     // consumers (sizes + both self-join sides) that each re-ran the
     // tokenize+shingle+distinct pipeline; it is vocabulary-bounded (one
     // row per distinct gram per source), so one materialization replaces
-    // two full corpus passes. r20: honors `checkpoint`.
-    val d = CheckpointStrategy.materializer(checkpoint)(df
+    // two full corpus passes.
+    val d = Checkpoint.materialize(df
       .select(col(sourceCol).as("source"),
         TextStats.tokens(coalesce(col(textCol), lit(""))).as("__t"))
       .select(col("source"),
@@ -375,7 +372,7 @@ object Audit {
     // exact groups: representative = min id, carry the group size
     val groups = fp.groupBy(col("__fp"))
       .agg(min(col("id")).as("rep"), count(lit(1)).as("gsize"))
-      .localCheckpoint() // feeds the rep anti-join AND the size weighting
+      .transform(Checkpoint.materialize) // feeds the rep anti-join AND the size weighting
     val reps = docs.join(groups.select(col("rep").as(idCol)),
       Seq(idCol), "left_semi")
     val clusters = Dedup.nearDupClusters(
@@ -455,7 +452,7 @@ object Audit {
     val d = docs
       .select(col(docIdCol).as("id"), coalesce(col(textCol), lit("")).as("__tx"))
       .join(assigned, Seq("id"))
-      .localCheckpoint() // feeds stats, cell-df, corpus-df and the count
+      .transform(Checkpoint.materialize) // feeds stats, cell-df, corpus-df and the count
     val stats = d.groupBy(col("cell")).agg(
       count(lit(1)).as("n_docs"),
       sum(TextStats.tokenCount(col("__tx")).cast("long")).as("tokens_sum"),
@@ -559,7 +556,7 @@ object Audit {
     val o = prep(oldDf); val nw = prep(newDf)
     val piv = o.orderBy(col("id")).limit(nCells)
       .select(col("id").as("pid"), col("v").as("pv"))
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     def d2c(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
     def cellsOf(df: DataFrame): DataFrame = {
@@ -593,7 +590,7 @@ object Audit {
     // nCells rows, but the lineage embeds both corpus assignment passes
     // and feeds TWO consumers (the totals aggregate and the final select)
     // — materialize so each snapshot is scanned once
-    val joined = om.join(nm, Seq("cell"), "full_outer").localCheckpoint()
+    val joined = om.join(nm, Seq("cell"), "full_outer").transform(Checkpoint.materialize)
     val totals = joined.agg(
       sum(coalesce(col("n_old"), lit(0L))).as("__to"),
       sum(coalesce(col("n_new"), lit(0L))).as("__tn"))

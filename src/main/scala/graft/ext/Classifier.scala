@@ -99,7 +99,7 @@ object Classifier {
       .unionAll(featureRows(neg, idCol, textCol, 0.0, buckets, salt))
       .repartition(math.max(2, pos.sparkSession.sparkContext.defaultParallelism / 8),
         col("__key"))
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     val n = feats.select(countDistinct(col("__key"))).head().getLong(0)
     require(n > 0, "training slices produced no feature rows")
 
@@ -205,16 +205,4 @@ object Classifier {
         (col("__pos").cast("double") / col("n").cast("double")).as("frac_pos"))
       .withColumn("cal_gap", col("mean_prob") - col("frac_pos"))
   }
-
-  /** Train-and-score in one call (the q111 shape): fit on the labeled
-    * slices, score `df`. For repeated batches train once and reuse
-    * [[score]] with the returned model. */
-  def qualityClassifierScore(df: DataFrame, idCol: String, textCol: String,
-                             pos: DataFrame, neg: DataFrame,
-                             buckets: Int = 1 << 12, iters: Int = 20,
-                             lr: Double = 50.0, l2: Double = 0.0,
-                             threshold: Double = 0.5,
-                             salt: String = "graft:clf"): DataFrame =
-    score(df, idCol, textCol,
-      train(pos, neg, idCol, textCol, buckets, iters, lr, l2, salt), threshold)
 }

@@ -91,11 +91,9 @@ object Corpus {
   def leakFreeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
                     weights: Seq[(String, Double)] =
                       Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-                    buckets: Int = 10000, salt: String = "graft:split",
-                    checkpoint: CheckpointStrategy =
-                      CheckpointStrategy.Local): DataFrame = {
+                    buckets: Int = 10000, salt: String = "graft:split"): DataFrame = {
     requireFresh(df, "leakFreeSplit", "cluster", "bucket", "split")
-    val clusters = Dedup.nearDupClusters(pairs, checkpoint = checkpoint)
+    val clusters = Dedup.nearDupClusters(pairs)
       .withColumnRenamed("id", idCol)
     val withRep = df.join(clusters, Seq(idCol), "left")
       .withColumn("cluster", coalesce(col("cluster"), col(idCol)))
@@ -590,18 +588,16 @@ object Corpus {
                         textCol: String, benchIdCol: String,
                         benchTextCol: String, minJaccard: Double = 0.8,
                         numPerm: Int = 128, bands: Int = 32, k: Int = 4,
-                        maxBucketSize: Option[Int] = Some(Dedup.DefaultMaxBandBucket),
-                        checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                        maxBucketSize: Option[Int] = Some(Dedup.DefaultMaxBandBucket)): DataFrame = {
     require(minJaccard > 0.0 && minJaccard <= 1.0,
       s"minJaccard must be in (0,1], got $minJaccard")
-    val m = CheckpointStrategy.materializer(checkpoint)
-    val corpusBk = m(Dedup.capBuckets(
+    val corpusBk = Checkpoint.materialize(Dedup.capBuckets(
       Dedup.bandedSignatures(
         Dedup.minhashSignatures(corpus, idCol, textCol, numPerm, k),
         numPerm, bands),
       maxBucketSize)
       .select(col("id"), col("bk")))
-    val benchBk = m(Dedup.capBuckets(
+    val benchBk = Checkpoint.materialize(Dedup.capBuckets(
       Dedup.bandedSignatures(
         Dedup.minhashSignatures(
           bench.select(col(benchIdCol).as("__bid"), col(benchTextCol).as("__bt")),
@@ -649,14 +645,13 @@ object Corpus {
     * per-benchmark hit count, and their ratio. Clean documents emit
     * nothing (inner join — the report is benchmark-hits-sized, not
     * corpus-sized). The corpus gram table feeds two consumers (sizes,
-    * hits), so it is materialized once (`checkpoint`) instead of running
+    * hits), so it is materialized once ([[Checkpoint.materialize]]) instead of running
     * the tokenize→shingle pipeline twice. */
   def contaminationByBenchmark(corpus: DataFrame, bench: DataFrame,
                                idCol: String, textCol: String,
-                               benchCol: String, k: Int = 8,
-                               checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                               benchCol: String, k: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val docGrams = CheckpointStrategy.materializer(checkpoint)(
+    val docGrams = Checkpoint.materialize(
       corpus.select(col(idCol).as("id"), TextStats.tokens(col(textCol)).as("__t"))
         .select(col("id"), explode(Dedup.shinglesOfTokens(col("__t"), k)).as("g")))
     val benchGrams = bench
@@ -747,10 +742,9 @@ object Corpus {
     * make the split arbitrary). Values are order-independent integer/double
     * sums per prefix, so the output does not depend on where the sampled
     * range boundaries land. The ranged input feeds two consumers (totals +
-    * cumsum), so it is materialized once via `checkpoint`. */
+    * cumsum), so it is materialized once ([[Checkpoint.materialize]]). */
   def prefixSum(df: DataFrame, orderCol: String, valueCol: String,
-                outCol: String = "cumsum",
-                checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                outCol: String = "cumsum"): DataFrame = {
     import org.apache.spark.sql.types._
     require(df.schema(valueCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
@@ -762,7 +756,7 @@ object Corpus {
     // nulls count as 0 in BOTH the totals and the running sum, so the two
     // phases agree and an all-null partition cannot NPE the driver collect
     val v = coalesce(col(valueCol).cast("long"), lit(0L))
-    val ranged = CheckpointStrategy.materializer(checkpoint)(
+    val ranged = Checkpoint.materialize(
       df.repartitionByRange(n, col(orderCol))
         .withColumn("__pid", spark_partition_id()))
     // one row per partition: (pid, total) -> cumulative offset of everything
@@ -808,15 +802,13 @@ object Corpus {
     * first, most SQL engines last), so coalesce the score upstream if
     * the input can be null and cross-engine q_norm parity matters. */
   def quantileNormalizeScores(df: DataFrame, groupCol: String,
-                              scoreCol: Column, keepTopFrac: Double = 0.5,
-                              checkpoint: CheckpointStrategy =
-                                CheckpointStrategy.Local): DataFrame = {
+                              scoreCol: Column, keepTopFrac: Double = 0.5): DataFrame = {
     require(keepTopFrac > 0.0 && keepTopFrac <= 1.0,
       s"keepTopFrac must be in (0,1], got $keepTopFrac")
     requireFresh(df, "quantileNormalizeScores", "__s6", "q_norm", "kept")
     // the rounded score feeds the histogram AND the join back — one
     // materialization
-    val scored = CheckpointStrategy.materializer(checkpoint)(
+    val scored = Checkpoint.materialize(
       df.withColumn("__s6", round(scoreCol, 6)))
     val hist = scored.groupBy(col(groupCol), col("__s6"))
       .agg(count(lit(1)).as("__c"))
@@ -846,11 +838,10 @@ object Corpus {
     * capacity)`. Pure arithmetic over [[prefixSum]], so it inherits the
     * distributed two-phase shape. Adds `cum_tokens` and `chunk`. */
   def packSequences(df: DataFrame, orderCol: String, tokenCol: String,
-                    capacity: Long,
-                    checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                    capacity: Long): DataFrame = {
     require(capacity > 0, s"capacity must be positive, got $capacity")
     requireFresh(df, "packSequences", "cum_tokens", "chunk")
-    prefixSum(df, orderCol, tokenCol, "cum_tokens", checkpoint)
+    prefixSum(df, orderCol, tokenCol, "cum_tokens")
       .withColumn("chunk",
         floor((col("cum_tokens") - col(tokenCol)) / capacity).cast("long"))
   }
@@ -891,12 +882,11 @@ object Corpus {
     * original document). */
   def packTokenArrays(df: DataFrame, orderCol: String, idsCol: String,
                       capacity: Long,
-                      checkpoint: CheckpointStrategy = CheckpointStrategy.Local,
                       docCol: Option[String] = None): DataFrame = {
     require(capacity > 0, s"capacity must be positive, got $capacity")
     requireFresh(df, "packTokenArrays", "chunk", "ids", "n_ids", "doc_spans")
     val withLen = df.withColumn("__n", size(col(idsCol)).cast("long"))
-    val off = prefixSum(withLen, orderCol, "__n", "__cum", checkpoint)
+    val off = prefixSum(withLen, orderCol, "__n", "__cum")
       .withColumn("__start", col("__cum") - col("__n"))
       .withColumn("__ids", col(idsCol))
     val sliced = off.select(col("__start"),
@@ -1367,16 +1357,14 @@ object Corpus {
     * aggregate (3 narrow sums) + one equi-join back — group-count-sized
     * state, the corpus never shuffles wider than its group key. The
     * input feeds BOTH the aggregate and the join (a diamond), so it is
-    * materialized once via `checkpoint` — without it Catalyst re-derives
+    * materialized once ([[Checkpoint.materialize]]) — without it Catalyst re-derives
     * the whole upstream chain (an exploded candidate serialization, say)
     * on each branch. */
   def groupAdvantage(df: DataFrame, groupCol: String,
-                     scoreCol: String,
-                     checkpoint: CheckpointStrategy =
-                       CheckpointStrategy.Local): DataFrame = {
+                     scoreCol: String): DataFrame = {
     requireFresh(df, "groupAdvantage", "group_n", "group_mean",
       "group_std", "advantage", "__s1", "__s2")
-    val mat = CheckpointStrategy.materializer(checkpoint)(df)
+    val mat = Checkpoint.materialize(df)
     val sc = col(scoreCol).cast("double")
     val stats = mat.groupBy(col(groupCol)).agg(
       count(lit(1)).as("group_n"),
@@ -1478,14 +1466,12 @@ object Corpus {
     * struct stream and unzipped after — the packing arithmetic (strict
     * prefix-sum offsets, chunk slicing, span reassembly) is shared, not
     * re-derived, so every law q174 pins (chunk hashes, span coverage,
-    * crash-replay determinism via the checkpoint strategy) holds here by
+    * crash-replay determinism) holds here by
     * construction. Output: `chunk`, `toks`, `mask`, `n_toks`,
     * `doc_spans`. Same scale shape as q174: tokenize-stream-sized
     * prefix sum + ONE chunk-keyed reassembly shuffle. */
   def packMaskedTokens(df: DataFrame, orderCol: String, toksCol: String,
-                       maskCol: String, capacity: Long,
-                       checkpoint: CheckpointStrategy =
-                         CheckpointStrategy.Local): DataFrame = {
+                       maskCol: String, capacity: Long): DataFrame = {
     // the consumed token/mask columns are dropped before packing, so
     // their names (often literally "toks"/"mask") may coincide with the
     // output's — freshness applies to the carried-through columns only
@@ -1495,7 +1481,7 @@ object Corpus {
       .withColumn("__zip", zip_with(col(toksCol), col(maskCol),
         (t, m) => struct(t.as("t"), m.as("m"))))
       .drop(toksCol, maskCol)
-    packTokenArrays(zipped, orderCol, "__zip", capacity, checkpoint)
+    packTokenArrays(zipped, orderCol, "__zip", capacity)
       .select(col("chunk"),
         transform(col("ids"), x => x.getField("t")).as("toks"),
         transform(col("ids"), x => x.getField("m")).as("mask"),
@@ -1522,9 +1508,7 @@ object Corpus {
     * plus one `count()` (n — the schedule arithmetic needs it; for a
     * chunk manifest this scan is chunk-count-sized). */
   def batchSchedule(df: DataFrame, idCol: String, worldSize: Int,
-                    epochs: Int, salt: String = "graft:shuffle",
-                    checkpoint: CheckpointStrategy =
-                      CheckpointStrategy.Local): DataFrame = {
+                    epochs: Int, salt: String = "graft:shuffle"): DataFrame = {
     require(worldSize >= 1, s"worldSize must be >= 1, got $worldSize")
     require(epochs >= 1, s"epochs must be >= 1, got $epochs")
     requireFresh(df, "batchSchedule", "epoch", "step", "device_rank",
@@ -1537,7 +1521,7 @@ object Corpus {
         col("epoch").cast("string"), lit(":" + salt))))
       .withColumn("__so", struct(col("epoch"), col("__sk"), col(idCol)))
       .withColumn("__s1", lit(1L))
-    prefixSum(exploded, "__so", "__s1", "__sc", checkpoint)
+    prefixSum(exploded, "__so", "__s1", "__sc")
       .withColumn("step",
         expr(s"CAST((__sc - 1 - epoch * ${n}L) DIV ${worldSize}L AS BIGINT)"))
       .withColumn("device_rank",
@@ -1566,9 +1550,7 @@ object Corpus {
     * `floor(n · annealFrac)` — one double multiply + floor, which the
     * q207 oracle replays exactly. */
   def annealOrder(df: DataFrame, idCol: String, scoreCol: String,
-                  annealFrac: Double, salt: String = "graft:anneal",
-                  checkpoint: CheckpointStrategy =
-                    CheckpointStrategy.Local): DataFrame = {
+                  annealFrac: Double, salt: String = "graft:anneal"): DataFrame = {
     require(annealFrac >= 0.0 && annealFrac <= 1.0,
       s"annealFrac must be in [0,1], got $annealFrac")
     requireFresh(df, "annealOrder", "phase", "quality_rank", "train_order",
@@ -1579,7 +1561,7 @@ object Corpus {
       df.withColumn("__qo",
           struct((col(scoreCol) * -1).as("s"), col(idCol).as("i")))
         .withColumn("__one", lit(1L)),
-      "__qo", "__one", "quality_rank", checkpoint)
+      "__qo", "__one", "quality_rank")
     val flagged = ranked
       .withColumn("phase", when(col("quality_rank") <= nAnneal,
         lit("anneal")).otherwise(lit("main")))
@@ -1588,7 +1570,7 @@ object Corpus {
       .withColumn("__to", struct(
         when(col("phase") === "anneal", 1).otherwise(0).as("ph"),
         col("__sk").as("k"), col(idCol).as("i")))
-    prefixSum(flagged, "__to", "__one", "train_order", checkpoint)
+    prefixSum(flagged, "__to", "__one", "train_order")
       .withColumn("train_order", col("train_order") - 1L)
       .drop("__qo", "__sk", "__one", "__to")
   }
@@ -1797,8 +1779,7 @@ object Corpus {
     * Output: input + `bucket`, `padded_len`, `batch_in_bucket`,
     * `seq_in_batch`. */
   def lengthBucketBatches(df: DataFrame, orderCol: String, lenCol: String,
-                          bucketWidth: Int, capacity: Long,
-                          checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                          bucketWidth: Int, capacity: Long): DataFrame = {
     require(bucketWidth >= 1, s"bucketWidth must be >= 1, got $bucketWidth")
     require(capacity >= 1, s"capacity must be >= 1, got $capacity")
     requireFresh(df, "lengthBucketBatches", "bucket", "padded_len",
@@ -1816,7 +1797,7 @@ object Corpus {
       .withColumn("__perb",
         greatest(expr(s"${capacity}L DIV padded_len"), lit(1L)))
     val n = math.max(1, df.sparkSession.sparkContext.defaultParallelism)
-    val ranged = CheckpointStrategy.materializer(checkpoint)(
+    val ranged = Checkpoint.materialize(
       withB.repartitionByRange(n, col("bucket"), col(orderCol))
         .withColumn("__pid", spark_partition_id()))
     // one row per (partition, bucket): count -> cumulative offset of the
@@ -1875,8 +1856,7 @@ object Corpus {
     * every doc seated exactly once, and batch count ≤
     * [[lengthBucketBatches]]'s on the same fixture. */
   def binPackBatches(df: DataFrame, idCol: String, lenCol: String,
-                     capacity: Long, groupDocs: Int = 64,
-                     checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                     capacity: Long, groupDocs: Int = 64): DataFrame = {
     require(capacity >= 1, s"capacity must be >= 1, got $capacity")
     require(groupDocs >= 1, s"groupDocs must be >= 1, got $groupDocs")
     requireFresh(df, "binPackBatches", "pack_group", "batch_in_group",
@@ -1889,7 +1869,7 @@ object Corpus {
     val keyed = df.select(col(idCol), len.as("__len"))
       .withColumn("__ord", struct((-col("__len")).as("s"),
         col(idCol).as("i")))
-    val ranged = CheckpointStrategy.materializer(checkpoint)(
+    val ranged = Checkpoint.materialize(
       keyed.repartitionByRange(n, col("__ord"))
         .withColumn("__pid", spark_partition_id()))
     val totals = ranged.groupBy(col("__pid"))
@@ -1971,13 +1951,12 @@ object Corpus {
     * window, O(parallelism) driver offsets. No global-order window, no
     * driver-side keep set. */
   def selectUnderTokenBudget(df: DataFrame, idCol: String, tokenCol: String,
-                             scoreCol: String, budget: Long,
-                             checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                             scoreCol: String, budget: Long): DataFrame = {
     require(budget >= 0L, s"budget must be >= 0, got $budget")
     requireFresh(df, "selectUnderTokenBudget", "cum_tokens", "__ord")
     val ordered = df.withColumn("__ord",
       struct((-col(scoreCol)).as("s"), col(idCol).as("i")))
-    prefixSum(ordered, "__ord", tokenCol, "cum_tokens", checkpoint)
+    prefixSum(ordered, "__ord", tokenCol, "cum_tokens")
       .filter(col("cum_tokens") <= budget)
       .drop("__ord")
   }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * through one materialization boundary, no stage re-scans the corpus,
   * and the per-document verdict is auditable.
   *
-  * Scale shape: 7 stage boundaries, each a `CheckpointStrategy`
-  * materialization of the shrinking survivor set; the only corpus-keyed
+  * Scale shape: 7 stage boundaries, each a [[Checkpoint.materialize]]
+  * cut of the shrinking survivor set; the only corpus-keyed
   * shuffles are the ones the member operators already make (url-key
   * aggregate, fingerprint aggregate, band buckets, cell pairs). The fate
   * labeling at the end is a chain of skinny id-only left joins. */
@@ -53,10 +53,8 @@ object Crawl {
                      maxUrlLen: Int = 2048, maxDigitFrac: Double = 0.5,
                      minJaccard: Double = 0.8, minCos: Double = 0.95,
                      nCells: Int = 16,
-                     checkpoint: CheckpointStrategy = CheckpointStrategy.Local,
                      materializeInput: Boolean = true)
       : DataFrame = {
-    val cp = CheckpointStrategy.materializer(checkpoint)
     // OPT r20: `base` fans out to three consumers (url stage, the emb
     // re-attach, the fate labeling) and CARRIES the embedding payload, so
     // it is the pipeline's heaviest materialization. A caller whose input
@@ -67,7 +65,7 @@ object Crawl {
     val baseProj = docs.select(col(idCol).as("id"), col(urlCol).as("url"),
       col(textCol).as("text"), col(scoreCol).as("score"),
       col(embCol).as("emb"))
-    val base = if (materializeInput) cp(baseProj) else baseProj
+    val base = if (materializeInput) Checkpoint.materialize(baseProj) else baseProj
     // OPT r19 — two restructurings, same fates (oracle-verified):
     //  1. Stages 2–4 (URL rules, C4, Gopher) are ROW-LOCAL rule flags
     //     ([[Urls.urlStats]]/[[TextStats.c4Stats]]/[[TextStats.gopherStats]]
@@ -94,28 +92,21 @@ object Crawl {
     // don't-care for rows an earlier rule already dropped — the fate
     // precedence below shadows them); `text` becomes C4's cleaned text,
     // exactly what the old per-stage substitution produced for survivors
-    val flags = cp(withGopher.select(col("id"), col("url_ok"),
+    val flags = Checkpoint.materialize(withGopher.select(col("id"), col("url_ok"),
       col("c4_keep"), col("gopher_pass"), col("clean_text").as("text")))
-    // pinnedFilter (ADVICE r19): under CheckpointStrategy.Passthrough the
-    // flags projection is NOT materialized, and a plain .filter would let
-    // PushDownPredicates inline the HOF verdict lineage below the filter
-    // (the documented q89 17× trap); the pin keeps the fused path safe
-    // under every strategy (no-op semantics, same rows).
-    val s4 = TextStats.pinnedFilter(flags,
-        col("url_ok") && col("c4_keep") && col("gopher_pass"))
+    // a plain filter: `flags` is materialized, so there is no verdict
+    // lineage for PushDownPredicates to inline below it
+    val s4 = flags.filter(col("url_ok") && col("c4_keep") && col("gopher_pass"))
       .select(col("id"), col("text"))
-    val s5 = cp(s4.join(Dedup.exact(s4, "id", "text").select(col("id")),
+    val s5 = Checkpoint.materialize(s4.join(Dedup.exact(s4, "id", "text").select(col("id")),
       Seq("id"), "left_semi"))
     val ndDrops = Dedup.nearDupClusters(
-        Dedup.minhashDedupPairs(s5, "id", "text", minJaccard,
-          checkpoint = checkpoint),
-        checkpoint = checkpoint)
+        Dedup.minhashDedupPairs(s5, "id", "text", minJaccard))
       .filter(col("id") =!= col("cluster")).select(col("id"))
-    val s6 = cp(s5.join(ndDrops, Seq("id"), "left_anti"))
+    val s6 = Checkpoint.materialize(s5.join(ndDrops, Seq("id"), "left_anti"))
     val s6e = s6.select(col("id"))
       .join(base.select(col("id"), col("emb")), Seq("id"))
-    val s7 = Similarity.semanticDedup(s6e, "id", "emb", minCos, nCells,
-      checkpoint = checkpoint).select(col("id"))
+    val s7 = Similarity.semanticDedup(s6e, "id", "emb", minCos, nCells).select(col("id"))
     val marked = base.select(col("id"))
       .join(flags.select(col("id"), col("url_ok"), col("c4_keep"),
         col("gopher_pass")).withColumn("__s1", lit(1)), Seq("id"), "left")

@@ -3,39 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Lineage-truncation strategy for iterative algorithms
-  * ([[Dedup.nearDupClusters]]). `Local` materializes executor-local blocks —
-  * fast and the right default in local mode, but the blocks are LOST on
-  * executor failure, killing the job mid-iteration. `Reliable(dir)` writes
-  * checkpoints under a (distributed) filesystem path and survives executor
-  * loss — use it on a real cluster. */
-sealed trait CheckpointStrategy
-object CheckpointStrategy {
-  case object Local extends CheckpointStrategy
-  final case class Reliable(dir: String) extends CheckpointStrategy
-
-  /** No materialization — for callers whose input is ALREADY materialized
-    * (a foreachBatch micro-batch source) where per-call checkpoint blocks
-    * would linger until RDD GC; see the streaming epoch loop's identity
-    * note. Multi-consumer plans re-execute their lineage under this
-    * strategy — only correct when that lineage is a materialized source. */
-  case object Passthrough extends CheckpointStrategy
-
-  /** The materialization function a strategy denotes — shared by every
-    * iterative/multi-consumer operator that truncates lineage. */
-  private[ext] def materializer(s: CheckpointStrategy): DataFrame => DataFrame =
-    s match {
-      case Local => _.localCheckpoint()
-      case Passthrough => identity
-      case Reliable(dir) =>
-        df => {
-          val sc = df.sparkSession.sparkContext
-          if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
-          df.checkpoint()
-        }
-    }
-}
-
 /** Deduplication operators for training-data pipelines: exact (fingerprint
   * hash-groupBy), n-gram Jaccard similarity join, MinHash+LSH, and SimHash.
   * (Beyond the reference surface; required by the build brief.)
@@ -126,18 +93,17 @@ object Dedup {
     * deliberately orthogonal (new-vs-seen only). */
   def incrementalExact(newDf: DataFrame, seenDf: DataFrame, idCol: String,
                        textCol: String, expectedSeen: Option[Long] = None,
-                       fpp: Double = 0.01,
-                       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                       fpp: Double = 0.01): DataFrame = {
     graft.funcs.VectorFunctions.register(newDf.sparkSession)
     // the distinct fingerprint set feeds TWO consumers (the Bloom build's
     // eager job and the confirm semi-join), so it is materialized once —
     // otherwise every ingested batch would scan and re-fingerprint the full
     // history twice
-    val seenFp = CheckpointStrategy.materializer(checkpoint)(
+    val seenFp = Checkpoint.materialize(
       seenDf.select(TextStats.fingerprint(col(textCol)).as("__fp")).distinct())
     val bytes = serializedBloom(buildSeenBloom(seenFp, expectedSeen, fpp))
     probeAndConfirm(newDf, seenFp, bytes, idCol, textCol,
-      CheckpointStrategy.materializer(checkpoint))
+      Checkpoint.materialize)
   }
 
   /** The probe+confirm core of [[incrementalExact]], with the (possibly
@@ -175,8 +141,8 @@ object Dedup {
     * probing a lazy projection re-evaluates the fingerprint (and everything
     * under it, including the caller's scans) once per arm — and (2) the
     * confirmed id set, which the final anti-join would otherwise duplicate
-    * per branch of a union-shaped `newDf`. Batch operators pass their
-    * checkpoint strategy; the streaming epoch loop passes identity (its
+    * per branch of a union-shaped `newDf`. Batch operators pass
+    * [[Checkpoint.materialize]]; the streaming epoch loop passes identity (its
     * per-batch lineage is the micro-batch source — already materialized —
     * and per-batch checkpoint blocks would linger until RDD GC). */
   private[graft] def probeAndConfirmMulti(newDf: DataFrame, seenFp: DataFrame,
@@ -230,13 +196,12 @@ object Dedup {
   def incrementalNear(newDf: DataFrame, seenDf: DataFrame, idCol: String,
                       textCol: String, k: Int = 4,
                       hasher: Hasher = Hasher.Xx, maxDist: Int = 0,
-                      expectedSeen: Option[Long] = None, fpp: Double = 0.01,
-                      checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                      expectedSeen: Option[Long] = None, fpp: Double = 0.01): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
       s"pigeonhole blocking assumes maxDist <= 3 (4 blocks), got $maxDist")
     // materialized once: feeds the Bloom build (+ its sizing count) and the
     // confirm join — same posture as incrementalExact's seenFp
-    val seenSig = CheckpointStrategy.materializer(checkpoint)(
+    val seenSig = Checkpoint.materialize(
       simhash(seenDf, idCol, textCol, k, hasher)
         .select(col("simhash").as("__sig")).distinct())
     // the batch's (id, signature) projection is materialized BEFORE the
@@ -245,7 +210,7 @@ object Dedup {
     // lazy projection re-evaluates the full simhash lineage (tokenize,
     // shingle, per-shingle hash, plus the caller's scans under it) once per
     // arm — measured 4 × the whole-batch signature cost at maxDist 3
-    val newSig = CheckpointStrategy.materializer(checkpoint)(
+    val newSig = Checkpoint.materialize(
       simhash(newDf, idCol, textCol, k, hasher))
     val confirmed =
       if (maxDist == 0) {
@@ -263,7 +228,7 @@ object Dedup {
     // a union-shaped newDf and executes that pipeline once per branch
     // (q65's fixture paid 2× the probe, the confirm join, and every
     // documents scan under it)
-    val confirmedIds = CheckpointStrategy.materializer(checkpoint)(confirmed)
+    val confirmedIds = Checkpoint.materialize(confirmed)
     newDf.join(confirmedIds, newDf(idCol) === confirmedIds("id"), "left_anti")
   }
 
@@ -432,16 +397,10 @@ object Dedup {
     * J is computed over the filtered shingle space (standard practice;
     * equivalent to Jaccard over discriminative shingles only). Pass `None`
     * to disable.
-    *
-    * `checkpoint` governs the posting-list materialization (default
-    * [[CheckpointStrategy.Local]]; pass [[CheckpointStrategy.Reliable]] on
-    * a real cluster — the postings are the operator's working set, and a
-    * local-only block is lost on executor failure).
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         minJaccard: Double = 0.8, k: Int = 4,
-                        maxDocFreq: Option[Int] = Some(DefaultMaxDocFreq),
-                        checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                        maxDocFreq: Option[Int] = Some(DefaultMaxDocFreq)): DataFrame = {
     val post0 = postings(df, idCol, textCol, k)
     // OPT r19: the posting list feeds THREE consumers (the per-doc sizes
     // aggregate and both sides of the co-occurrence self-join), and each
@@ -450,7 +409,7 @@ object Dedup {
     // keyed parents. One materialization of the skinny (id, gram) rows
     // replaces 3 corpus passes (guide §2.4/§5: cache only what is reused
     // AND expensive to recompute — this is both).
-    val all = CheckpointStrategy.materializer(checkpoint)(post0)
+    val all = Checkpoint.materialize(post0)
     // OPT r20 (guide §2.5, VERDICT r19 #4): the doc-freq cap was a windowed
     // count over `g`, which lands EVERY posting row of a hot gram on one
     // window task — the straggler the cap exists to prevent. Now a partial-
@@ -474,7 +433,7 @@ object Dedup {
         // (the common small-SF case) skips the join outright; an
         // over-threshold one (degenerate 100 TB boilerplate) falls back
         // to the planner's shuffled anti join, which AQE skew-splits.
-        val hot = CheckpointStrategy.materializer(checkpoint)(
+        val hot = Checkpoint.materialize(
           all.groupBy(col("g")).agg(count(lit(1)).as("__df"))
             .filter(col("__df") > mx).select(col("g")))
         val nHot = hot.count()
@@ -502,27 +461,21 @@ object Dedup {
     * near-dup cluster diameters are tiny). Returns (id, cluster) where
     * cluster = the smallest doc id in the component, i.e. the KEPT
     * representative of the dedup group. Each round is one shuffle join +
-    * aggregate; lineage is truncated per round so plans stay flat.
-    *
-    * @param checkpoint lineage-truncation strategy: [[CheckpointStrategy.Local]]
-    *   (default, local-mode) or [[CheckpointStrategy.Reliable]] with a
-    *   checkpoint dir for fault tolerance on a real cluster
-    */
-  def nearDupClusters(pairs: DataFrame, maxIters: Int = 20,
-                      checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    val cp: DataFrame => DataFrame = CheckpointStrategy.materializer(checkpoint)
+    * aggregate; lineage is truncated per round ([[Checkpoint.materialize]])
+    * so plans stay flat. */
+  def nearDupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // materialize the (possibly expensive) pair pipeline ONCE: edges and the
     // initial labels both derive from it, and every propagation round joins
     // against edges — without this the upstream similarity join would
     // re-execute each round
-    val p = cp(pairs.select(col("id1"), col("id2")))
+    val p = Checkpoint.materialize(pairs.select(col("id1"), col("id2")))
     val edges = p.unionByName(p.select(col("id2").as("id1"), col("id1").as("id2")))
     // fused first round: every node's initial label is min(self, min
     // neighbor) — identical to propagating once from self-labels, for the
     // price of the node-distinct aggregate the init pays anyway. Most
     // near-dup components are pairs/triples (diameter 1), so they converge
     // one full join+checkpoint round earlier.
-    var labels = cp(edges
+    var labels = Checkpoint.materialize(edges
       .groupBy(col("id1").as("id")).agg(min(col("id2")).as("__m"))
       .select(col("id"), least(col("id"), col("__m")).as("cluster")))
     var iters = 0
@@ -533,7 +486,7 @@ object Dedup {
         .agg(min(col("cluster")).as("__nbr"))
       // carry the previous label through the checkpoint so convergence
       // detection is a local filter over materialized rows, not another join
-      val next = cp(labels.join(nbrMin, Seq("id"), "left")
+      val next = Checkpoint.materialize(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("cluster").as("__old"),
           least(col("cluster"), coalesce(col("__nbr"), col("cluster"))).as("cluster")))
       converged = next.filter(col("cluster") =!= col("__old")).isEmpty
@@ -556,9 +509,8 @@ object Dedup {
     * it fits and shuffles on the key otherwise (at real dup rates the drop
     * set is a large fraction of the corpus, so no broadcast is forced). */
   def removeNearDups(df: DataFrame, idCol: String, pairs: DataFrame,
-                     maxIters: Int = 20,
-                     checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    val clusters = nearDupClusters(pairs, maxIters, checkpoint)
+                     maxIters: Int = 20): DataFrame = {
+    val clusters = nearDupClusters(pairs, maxIters)
     val drop = clusters.filter(col("id") =!= col("cluster")).select(col("id"))
     df.join(drop, df(idCol) === drop("id"), "left_anti")
   }
@@ -586,14 +538,13 @@ object Dedup {
     * fit); documents in no cluster take n_copies = 1 without touching the
     * cluster table. */
   def softDedupWeights(df: DataFrame, idCol: String, pairs: DataFrame,
-                       maxIters: Int = 20,
-                       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                       maxIters: Int = 20): DataFrame = {
     val clash = Seq("cluster", "n_copies", "weight").filter(df.columns.contains)
     require(clash.isEmpty, s"softDedupWeights reserves column name(s) " +
       s"${clash.mkString(", ")}; rename the input column(s) first")
     // only members present in df count toward n_copies — pairs may come
     // from a superset corpus, and absent members must not dilute weights
-    val clusters = nearDupClusters(pairs, maxIters, checkpoint)
+    val clusters = nearDupClusters(pairs, maxIters)
       .join(df.select(col(idCol).as("id")), Seq("id"), "left_semi")
     val sizes = clusters.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_copies"))
@@ -810,11 +761,9 @@ object Dedup {
     * a cluster terminal's job — this drops arrivals against history. */
   def incrementalTypo(newDf: DataFrame, seenDf: DataFrame, idCol: String,
                       strCol: String, maxDist: Int = 1,
-                      expectedSeen: Option[Long] = None, fpp: Double = 0.01,
-                      checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame =
+                      expectedSeen: Option[Long] = None, fpp: Double = 0.01): DataFrame =
     dropSeenTypos(newDf, idCol, strCol,
-      prepareTypoCatalog(seenDf, strCol, maxDist, expectedSeen, fpp,
-        checkpoint), checkpoint)
+      prepareTypoCatalog(seenDf, strCol, maxDist, expectedSeen, fpp))
 
   /** Frozen catalog state for typo ingestion dedup: the catalog's
     * distinct delete-variant postings (materialized once) plus their
@@ -840,11 +789,10 @@ object Dedup {
     * growth horizon: appends past the capacity only degrade the Bloom's
     * false-positive rate (more confirm-join rows), never correctness. */
   def prepareTypoCatalog(seenDf: DataFrame, strCol: String, maxDist: Int = 1,
-                         expectedSeen: Option[Long] = None, fpp: Double = 0.01,
-                         checkpoint: CheckpointStrategy = CheckpointStrategy.Local): TypoCatalog = {
+                         expectedSeen: Option[Long] = None, fpp: Double = 0.01): TypoCatalog = {
     require(maxDist == 1 || maxDist == 2,
       s"maxDist must be 1 or 2 (the SymSpell regime), got $maxDist")
-    val seenVars = CheckpointStrategy.materializer(checkpoint)(
+    val seenVars = Checkpoint.materialize(
       deleteVariantPostings(
           seenDf.select(col(strCol)).distinct(), strCol, strCol, maxDist)
         .select(col("__k"), col("__s").as("__s2")).distinct())
@@ -932,7 +880,7 @@ object Dedup {
     val shardVars = deleteVariantPostings(
         shard.select(col(strCol)).distinct(), strCol, strCol, maxDist)
       .select(col("__k"), col("__s").as("__s2")).distinct()
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     shardVars.write.mode(org.apache.spark.sql.SaveMode.Append)
       .saveAsTable(s"${name}_vars")
     val merged = org.apache.spark.util.sketch.BloomFilter.readFrom(
@@ -967,12 +915,19 @@ object Dedup {
   /** Drop from `newDf` every arrival within Levenshtein `cat.maxDist` of
     * the prepared catalog (see [[incrementalTypo]] for the shape). */
   def dropSeenTypos(newDf: DataFrame, idCol: String, strCol: String,
-                    cat: TypoCatalog,
-                    checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                    cat: TypoCatalog): DataFrame =
+    dropSeenTypos(newDf, idCol, strCol, cat, Checkpoint.materialize)
+
+  /** [[dropSeenTypos]] with the lineage cut supplied by the caller: the
+    * streaming epoch loop passes identity, since its micro-batch source is
+    * already materialized and per-batch checkpoint blocks would linger
+    * until RDD GC. */
+  private[graft] def dropSeenTypos(newDf: DataFrame, idCol: String,
+                                   strCol: String, cat: TypoCatalog,
+                                   materialize: DataFrame => DataFrame): DataFrame = {
     graft.funcs.VectorFunctions.register(newDf.sparkSession)
-    val mat = CheckpointStrategy.materializer(checkpoint)
-    val newVars = mat(deleteVariantPostings(newDf, idCol, strCol, cat.maxDist))
-    val confirmed = mat(newVars
+    val newVars = materialize(deleteVariantPostings(newDf, idCol, strCol, cat.maxDist))
+    val confirmed = materialize(newVars
       .filter(graft.funcs.VectorFunctions.bloomMightContain(
         xxhash64(col("__k")), cat.filterBytes))
       .join(cat.seenVars, Seq("__k"))
@@ -1145,18 +1100,14 @@ object Dedup {
     * EVERY band it collides in is oversized. Pass `None` to disable. */
   def lshCandidates(sigs: DataFrame, numPerm: Int = 128,
                     bands: Int = 32,
-                    maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket),
-                    checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                    maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket)): DataFrame = {
     // OPT r19: materialize the capped (id, bk) band rows once — the q35
     // plan audit showed BOTH self-join sides re-running the full
     // minhash-signature pipeline (tokenize → shingle → 128 permutations)
     // from the parquet scan up, with no exchange reuse. The band rows are
     // skinny key/metadata pairs (guide §8: shuffle keys, not payloads), so
     // one materialization is far cheaper than a second signature pass.
-    // `checkpoint` upgrades the materialization on a cluster (r20: the
-    // band rows are the operator's working set — Reliable survives
-    // executor loss where a local block does not).
-    val buckets = CheckpointStrategy.materializer(checkpoint)(
+    val buckets = Checkpoint.materialize(
       capBuckets(bandedSignatures(sigs, numPerm, bands), maxBucketSize))
     buckets.as("a").join(buckets.as("b"),
         col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
@@ -1180,17 +1131,15 @@ object Dedup {
   def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
                         minJaccard: Double = 0.8, numPerm: Int = 128,
                         bands: Int = 32, k: Int = 4,
-                        maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket),
-                        checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                        maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket)): DataFrame = {
     // OPT r19: the candidate pair list feeds the id-collection AND the
     // final confirm join; un-materialized, each consumer re-ran the whole
     // banded self-join (and its signature pipeline) from scratch.
     // Candidates are a tiny fraction of all pairs by construction — one
-    // cheap materialization halves the LSH work. `checkpoint` threads to
-    // the band-row materialization too (r20).
-    val cands = CheckpointStrategy.materializer(checkpoint)(
+    // cheap materialization halves the LSH work.
+    val cands = Checkpoint.materialize(
       lshCandidates(minhashSignatures(df, idCol, textCol, numPerm, k),
-        numPerm, bands, maxBucketSize, checkpoint))
+        numPerm, bands, maxBucketSize))
     val candIds = cands
       .select(explode(array(col("id1"), col("id2"))).as("id")).distinct()
     // the candidate-id semi-join is left to AQE: at real dup rates candidate
@@ -1248,13 +1197,11 @@ object Dedup {
                          textCol: String, minJaccard: Double = 0.8,
                          numPerm: Int = 128, bands: Int = 32, k: Int = 4,
                          maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket),
-                         expectedSeen: Option[Long] = None, fpp: Double = 0.01,
-                         checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    val m = CheckpointStrategy.materializer(checkpoint)
+                         expectedSeen: Option[Long] = None, fpp: Double = 0.01): DataFrame = {
     def bandKey = xxhash64(col("bk.band"), col("bk.sig"))
     // materialized once: feeds the Bloom build (+ its sizing count) and the
     // confirm join — incrementalExact's seenFp posture
-    val seenBk = m(capBuckets(
+    val seenBk = Checkpoint.materialize(capBuckets(
       bandedSignatures(
         minhashSignatures(seenDf, idCol, textCol, numPerm, k), numPerm, bands),
       maxBucketSize)
@@ -1264,7 +1211,7 @@ object Dedup {
     // batch signatures materialized BEFORE the probe (the ORed-probe /
     // no-CSE lesson from incrementalNear: a lazy projection would re-run
     // the whole signature lineage under the filter)
-    val newBk = m(bandedSignatures(
+    val newBk = Checkpoint.materialize(bandedSignatures(
       minhashSignatures(newDf, idCol, textCol, numPerm, k), numPerm, bands))
     val probed = newBk.filter(
       graft.funcs.VectorFunctions.bloomMightContain(bandKey, bytes))
@@ -1296,7 +1243,7 @@ object Dedup {
     // bounded by the batch, but its plan embeds the whole probe+confirm
     // pipeline — materialize before the anti-join (incrementalNear's q65
     // union-shaped-input lesson)
-    val confirmedIds = m(confirmed)
+    val confirmedIds = Checkpoint.materialize(confirmed)
     newDf.join(confirmedIds, newDf(idCol) === confirmedIds("id"), "left_anti")
   }
 
@@ -1315,7 +1262,7 @@ object Dedup {
     * cap guards genuine skew instead of silently changing semantics.
     * The representative sub-corpus is a multi-consumer input (the signature
     * branch, both sides of the candidate verification, and the final
-    * anti-join all read it), so it is materialized ONCE via `checkpoint` —
+    * anti-join all read it), so it is materialized ONCE via [[Checkpoint.materialize]] —
     * the same posture as [[nearDupClusters]]'s pair input; without it the
     * fingerprint groupBy and corpus scan would re-execute per consumer.
     * No broadcast is forced anywhere. */
@@ -1323,10 +1270,9 @@ object Dedup {
                   minJaccard: Double = 0.8, numPerm: Int = 128,
                   bands: Int = 32, k: Int = 4,
                   maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket),
-                  maxIters: Int = 20,
-                  checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame =
+                  maxIters: Int = 20): DataFrame =
     dedupCorpusCore(df, idCol, textCol, minJaccard, numPerm, bands, k,
-      maxBucketSize, maxIters, checkpoint, diagnose = false)._1
+      maxBucketSize, maxIters, diagnose = false)._1
 
   /** [[dedupCorpus]] with QUALITY-AWARE representative choice — the
     * [[exactKeepBest]] policy extended through the near-dup stage: each
@@ -1343,14 +1289,13 @@ object Dedup {
                           minJaccard: Double = 0.8, numPerm: Int = 128,
                           bands: Int = 32, k: Int = 4,
                           maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket),
-                          maxIters: Int = 20,
-                          checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                          maxIters: Int = 20): DataFrame = {
     val reps = exactKeepBest(df, idCol, textCol, scoreCol).select(col(idCol))
-    val repDocs = CheckpointStrategy.materializer(checkpoint)(
+    val repDocs = Checkpoint.materialize(
       df.join(reps, Seq(idCol), "left_semi"))
     val pairs = minhashDedupPairs(repDocs, idCol, textCol, minJaccard,
-      numPerm, bands, k, maxBucketSize, checkpoint)
-    val clusters = nearDupClusters(pairs, maxIters, checkpoint)
+      numPerm, bands, k, maxBucketSize)
+    val clusters = nearDupClusters(pairs, maxIters)
     val members = clusters.join(
       repDocs.select(col(idCol).as("id"), col(scoreCol).as("__sc")), Seq("id"))
     val winners = members.groupBy(col("cluster"))
@@ -1374,10 +1319,9 @@ object Dedup {
                             minJaccard: Double = 0.8, numPerm: Int = 128,
                             bands: Int = 32, k: Int = 4,
                             maxBucketSize: Option[Int] = Some(DefaultMaxBandBucket),
-                            maxIters: Int = 20,
-                            checkpoint: CheckpointStrategy = CheckpointStrategy.Local): (DataFrame, BucketCapReport) = {
+                            maxIters: Int = 20): (DataFrame, BucketCapReport) = {
     val (out, report) = dedupCorpusCore(df, idCol, textCol, minJaccard,
-      numPerm, bands, k, maxBucketSize, maxIters, checkpoint, diagnose = true)
+      numPerm, bands, k, maxBucketSize, maxIters, diagnose = true)
     (out, report.get)
   }
 
@@ -1387,10 +1331,10 @@ object Dedup {
   private def dedupCorpusCore(df: DataFrame, idCol: String, textCol: String,
                               minJaccard: Double, numPerm: Int, bands: Int,
                               k: Int, maxBucketSize: Option[Int],
-                              maxIters: Int, checkpoint: CheckpointStrategy,
+                              maxIters: Int,
                               diagnose: Boolean): (DataFrame, Option[BucketCapReport]) = {
     val reps = exact(df, idCol, textCol).select(col(idCol))
-    val repDocs = CheckpointStrategy.materializer(checkpoint)(
+    val repDocs = Checkpoint.materialize(
       df.join(reps, Seq(idCol), "left_semi"))
     val report =
       if (diagnose) Some(bucketCapReport(
@@ -1398,8 +1342,8 @@ object Dedup {
         maxBucketSize, numPerm, bands))
       else None
     val pairs = minhashDedupPairs(repDocs, idCol, textCol, minJaccard,
-      numPerm, bands, k, maxBucketSize, checkpoint)
-    (removeNearDups(repDocs, idCol, pairs, maxIters, checkpoint), report)
+      numPerm, bands, k, maxBucketSize)
+    (removeNearDups(repDocs, idCol, pairs, maxIters), report)
   }
 
   // ---- SimHash ----------------------------------------------------------
@@ -1446,7 +1390,7 @@ object Dedup {
     // OPT r19: both self-join sides re-executed the caller's signature
     // lineage (SimHash over text, or a full image/audio/video DECODE for
     // the media callers) — materialize the skinny (id, sig) rows once
-    val sigsM = sigs.localCheckpoint()
+    val sigsM = Checkpoint.materialize(sigs)
     val blocks = (0 until 4).map(b =>
       struct(lit(b).as("blk"),
         shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("v")))
@@ -1471,15 +1415,13 @@ object Dedup {
     * pairs AND incremental paths). Returns the fresh (id, sig) rows. */
   def incrementalHamming(newSigs: DataFrame, seenSigs: DataFrame,
                          maxDist: Int = 0,
-                         expectedSeen: Option[Long] = None, fpp: Double = 0.01,
-                         checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                         expectedSeen: Option[Long] = None, fpp: Double = 0.01): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
       s"pigeonhole blocking assumes maxDist <= 3 (4 blocks), got $maxDist")
     graft.funcs.VectorFunctions.register(newSigs.sparkSession)
-    val m = CheckpointStrategy.materializer(checkpoint)
     // both sides materialized (the incrementalNear no-CSE/probe lessons)
-    val seen = m(seenSigs.select(col("sig").as("__sig")).distinct())
-    val nw = m(newSigs.select(col("id"), col("sig").as("simhash")))
+    val seen = Checkpoint.materialize(seenSigs.select(col("sig").as("__sig")).distinct())
+    val nw = Checkpoint.materialize(newSigs.select(col("id"), col("sig").as("simhash")))
     val dropIds =
       if (maxDist == 0) {
         val bytes = serializedBloom(
@@ -1489,7 +1431,7 @@ object Dedup {
           .join(seen, col("simhash") === col("__sig"), "left_semi")
           .select(col("id"))
       } else nearSeenIds(nw, seen, maxDist, expectedSeen, fpp)
-    val confirmed = m(dropIds)
+    val confirmed = Checkpoint.materialize(dropIds)
     newSigs.join(confirmed, Seq("id"), "left_anti")
   }
 

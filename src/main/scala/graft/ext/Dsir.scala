@@ -92,7 +92,7 @@ object Dsir {
     // materialized once so neither side re-runs its corpus aggregate
     val joined = tc.withColumnRenamed("c", "__ct")
       .join(rc.withColumnRenamed("c", "__cr"), Seq("bucket"), "full_outer")
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     val Array(tt, tr) = joined
       .agg(sum(coalesce(col("__ct"), lit(0L))), sum(coalesce(col("__cr"), lit(0L))))
       .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long]).toArray
@@ -150,15 +150,15 @@ object Dsir {
     * strictly-above-cutoff (embarrassingly parallel) plus an `orderBy +
     * limit` tie-fill restricted to the single boundary weight — the only
     * funnel, sized by one value's tie set, not by K. The scored corpus
-    * feeds three consumers, so it is materialized once (`checkpoint`). */
+    * feeds three consumers, so it is materialized once
+    * ([[Checkpoint.materialize]]). */
   def dsirSelect(df: DataFrame, idCol: String, textCol: String,
                  target: DataFrame, keepFrac: Double,
                  raw: DataFrame = null, buckets: Int = 10000, k: Long = 1L,
-                 salt: String = "graft:dsir",
-                 checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                 salt: String = "graft:dsir"): DataFrame = {
     require(keepFrac > 0.0 && keepFrac <= 1.0,
       s"keepFrac must be in (0, 1], got $keepFrac")
-    val scored = CheckpointStrategy.materializer(checkpoint)(
+    val scored = Checkpoint.materialize(
       dsirLogWeights(df, idCol, textCol, target, raw, buckets, k, salt))
     val hist = scored.groupBy(col("ds_logw")).agg(count(lit(1)).as("__c"))
     // descending cumulative counts via the two-phase distributed prefix sum
@@ -168,7 +168,7 @@ object Dsir {
     // Histogram-sized; feeds the total AND the boundary row.
     val cum = Corpus.prefixSum(hist.withColumn("__ok", negate(col("ds_logw"))),
         "__ok", "__c", "__cum")
-      .drop("__ok").localCheckpoint()
+      .drop("__ok").transform(Checkpoint.materialize)
     if (cum.isEmpty) return scored // empty corpus: nothing to select
     val n = cum.agg(max(col("__cum"))).head().getLong(0)
     val keep = math.ceil(keepFrac * n).toLong

@@ -55,19 +55,19 @@ object Keywords {
         tokenizer(coalesce(col(textCol), lit("")))).as("__t"))
       .select(col("__id"), explode(col("__t")).as("term"))
       .groupBy(col("__id"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     // df ≡ docFreq: postings rows are distinct (id, term), so rows-per-term
     // IS the distinct-document count (assumes unique ids, the [[docFreq]]
     // contract either way)
     val dfAll = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     // cap: sort the vocabulary only when it binds — the deterministic
     // top-K (df desc, term asc) is unchanged, the common uncapped case
     // skips the global sort
     val dfT =
       if (dfAll.count() <= maxVocab) dfAll
       else dfAll.orderBy(col("df").desc, col("term")).limit(maxVocab)
-        .localCheckpoint()
+        .transform(Checkpoint.materialize)
     // column-pruned: the row count never needs the text
     val n = df.select(col(idCol)).count()
     val idf = log((lit(n) + lit(1L)).cast("double") /

@@ -79,11 +79,6 @@ object Multimodal {
       .withColumnRenamed("pos", "frame_idx")
       .withColumnRenamed("col", "frame_bytes")
 
-  /** "Resize" stub: truncate/pad payload to a fixed budget (stand-in for an
-    * image resize that bounds per-row cost downstream). */
-  def resizeTo(df: DataFrame, budget: Int): DataFrame =
-    df.withColumn("media", substring(col("media"), 1, budget))
-
   /** STUB feature extractor: a deterministic unit-norm embedding from hashed
     * byte features (feature-hashing of byte bigrams into `dims` buckets with
     * ±1 signs). The interface a real vision/audio encoder would fill — the

@@ -60,7 +60,7 @@ object Perplexity {
     // scoring broadcast — which would otherwise each re-run the count
     // aggregate and the sort (measured 2× the whole model build on q90)
     counts.orderBy(col("c").desc, col("gram")).limit(maxVocab)
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
 
   /** A FROZEN order-`n` add-`k` model: the capped gram/context count
     * tables (already materialized model-sized via [[capVocab]]) plus the
@@ -439,20 +439,19 @@ object Perplexity {
                          inDomain: DataFrame, general: DataFrame,
                          keepFrac: Double, n: Int = 2, k: Long = 1L,
                          maxVocab: Int = 1 << 20,
-                         tokenizer: Column => Column = TextStats.tokens,
-                         checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                         tokenizer: Column => Column = TextStats.tokens): DataFrame = {
     require(keepFrac > 0.0 && keepFrac <= 1.0,
       s"keepFrac must be in (0, 1], got $keepFrac")
     // the scored relation feeds the histogram, the tie scan and the final
     // projection — materialized once (the double-model scoring pipeline is
     // the dominant cost; see perplexityBuckets' measurement)
-    val scored = CheckpointStrategy.materializer(checkpoint)(
+    val scored = Checkpoint.materialize(
       crossEntropyDiffScore(df, idCol, textCol, inDomain, general, n, k,
         maxVocab, tokenizer))
     val hist = scored.filter(col("ml_score").isNotNull)
       .groupBy(col("ml_score")).agg(count(lit(1)).as("__c"))
-    val cum = Corpus.prefixSum(hist, "ml_score", "__c", "__cum", checkpoint)
-      .localCheckpoint()
+    val cum = Corpus.prefixSum(hist, "ml_score", "__c", "__cum")
+      .transform(Checkpoint.materialize)
     if (cum.isEmpty) // nothing scorable: nothing selected
       return scored.withColumn("selected", lit(false))
     val nScored = cum.agg(max(col("__cum"))).head().getLong(0)
@@ -491,15 +490,14 @@ object Perplexity {
     * tail = values whose block starts at or after n − floor(n·tailFrac). */
   def perplexityBuckets(scored: DataFrame, scoreCol: String = "nll_mean",
                         headFrac: Double = 1.0 / 3, tailFrac: Double = 1.0 / 3,
-                        bucketCol: String = "ppl_bucket",
-                        checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                        bucketCol: String = "ppl_bucket"): DataFrame = {
     require(headFrac >= 0.0 && tailFrac >= 0.0 && headFrac + tailFrac <= 1.0,
       s"fractions must be >= 0 and sum <= 1, got head=$headFrac tail=$tailFrac")
     // the scored relation feeds TWO consumers (the histogram aggregate and
     // the label join) — materialized once so an upstream scoring pipeline
     // (q95 feeds perplexityScore straight in) doesn't execute twice
     // (measured 6.5 s → ~4 s at sf0.1)
-    val scoredM = CheckpointStrategy.materializer(checkpoint)(scored)
+    val scoredM = Checkpoint.materialize(scored)
     val hist = scoredM.filter(col(scoreCol).isNotNull)
       .groupBy(col(scoreCol)).agg(count(lit(1)).as("__c"))
     // cumulative counts via the two-phase distributed prefix sum
@@ -508,8 +506,8 @@ object Perplexity {
     // be tens of millions of rows, and a global-order window would sort
     // them all in ONE task. Histogram-sized; feeds the total AND the label
     // projection, so materialized once.
-    val cum = Corpus.prefixSum(hist, scoreCol, "__c", "__cum", checkpoint)
-      .localCheckpoint()
+    val cum = Corpus.prefixSum(hist, scoreCol, "__c", "__cum")
+      .transform(Checkpoint.materialize)
     if (cum.isEmpty) // no scorable documents: every label is null
       return scoredM.withColumn(bucketCol, lit(null).cast("string"))
     val n = cum.agg(max(col("__cum"))).head().getLong(0)

@@ -135,7 +135,7 @@ object Quantize {
         s => struct(s.as("sub"), slice(col("__v"), s * dsub + 1, lit(dsub)).as("sv"))))
         .as("e"))
       .select(col("e.sub").as("sub"), col("e.sv").as("sv"))
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     var cent: Map[(Int, Int), Seq[Double]] = init.collect().map(r =>
       (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     for (_ <- 1 to iters) {
@@ -364,7 +364,7 @@ object Quantize {
     val corpus = prep(corpus0); val queries = prep(queries0)
     val cbs = pqCodebooksKmeans(prep(trainDf0),
       idCol, vecCol, m, ksub, kmeansIters)
-      .localCheckpoint() // model-sized; feeds the encode AND the ADC scan
+      .transform(Checkpoint.materialize) // model-sized; feeds the encode AND the ADC scan
     val enc = pqEncode(corpus, idCol, vecCol, cbs)
     // per-query ADC distance table (m·ksub entries), computed once on the
     // broadcast-sized query side — the corpus scan then pays m lookups per
@@ -512,7 +512,7 @@ object Quantize {
     // smallest-id pivot set — K rows, TakeOrdered, broadcast everywhere
     val piv = c.orderBy(col("id")).limit(nCells)
       .select(col("id").as("pid"), col("v").as("pv"))
-      .localCheckpoint() // feeds the assignment AND the probe side
+      .transform(Checkpoint.materialize) // feeds the assignment AND the probe side
     val trainDf = if (train == null) corpus else train
     val cbs = (if (residual)
         // the train-residual projection feeds THREE codebook-training
@@ -522,10 +522,10 @@ object Quantize {
         pqCodebooksKmeans(
           residualOf(nearestCellsPq(trainDf.select(col(idCol).as("id"),
             Similarity.toDouble(col(vecCol)).as("v")), piv, 1), "rv")
-            .select(col("id"), col("rv")).localCheckpoint(),
+            .select(col("id"), col("rv")).transform(Checkpoint.materialize),
           "id", "rv", m, ksub, kmeansIters)
       else pqCodebooksKmeans(trainDf, idCol, vecCol, m, ksub, kmeansIters))
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     val cAssigned = nearestCellsPq(c, piv, 1)
     val assigned = encodeAssigned(cAssigned, cbs, residual)
     (piv, cbs, assigned)

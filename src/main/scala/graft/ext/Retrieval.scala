@@ -58,18 +58,6 @@ object Retrieval {
       .groupBy(col("id"), col("len"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
-  /** (document count, total token count) — the two corpus-level BM25
-    * statistics. One aggregate; bounded driver state (two longs). */
-  def corpusStats(corpus: DataFrame, textCol: String,
-                  tokenizer: Column => Column = TextStats.tokens): (Long, Long) = {
-    val r = corpus.select(
-        size(tokenizer(coalesce(col(textCol), lit("")))).cast("long").as("__l"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(col("__l")), lit(0L)).as("sl"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** BM25 top-k from prebuilt postings + frozen corpus statistics:
     * (qid, doc_id, n_terms, score, rank), rank 1..topK per query by
     * (score desc, doc_id asc). See the object doc for the plan shape;
@@ -78,10 +66,7 @@ object Retrieval {
                        queries: DataFrame, qidCol: String, qtextCol: String,
                        topK: Int, k1: Double = 1.2, b: Double = 0.75,
                        maxDfFrac: Double = 0.5,
-                       tokenizer: Column => Column = TextStats.tokens,
-                       checkpoint: CheckpointStrategy =
-                         CheckpointStrategy.Local): DataFrame = {
-    val cp = CheckpointStrategy.materializer(checkpoint)
+                       tokenizer: Column => Column = TextStats.tokens): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(nDocs >= 1, s"BM25 needs a non-empty corpus, got nDocs=$nDocs")
     require(k1 >= 0.0 && b >= 0.0 && b <= 1.0,
@@ -94,14 +79,13 @@ object Retrieval {
         explode(TextStats.pinnedCol(
           tokenizer(coalesce(col(qtextCol), lit(""))))).as("term"))
       .distinct()
-    val qtM = cp(qt)
+    val qtM = Checkpoint.materialize(qt)
     val qterms = qtM.select(col("term")).distinct()
     // the inverted-index probe: only postings rows for query terms survive;
     // feeds the df aggregate AND the scoring join — one materialization
-    // (sized by the probed postings, the operator's true working set; on a
-    // cluster pass CheckpointStrategy.Reliable so the blocks survive
-    // executor loss — the bulk-probe regime can make this corpus-scale)
-    val hit = cp(post.join(broadcast(qterms), Seq("term")))
+    // (sized by the probed postings, the operator's true working set — the
+    // bulk-probe regime can make this corpus-scale)
+    val hit = Checkpoint.materialize(post.join(broadcast(qterms), Seq("term")))
     // stopword pruning: a term in more than maxDfFrac of the corpus scores
     // ~0 idf but costs O(N) postings rows — drop it before the fan-out
     val dfCap = math.max(1L, (maxDfFrac * nDocs.toDouble).toLong)
@@ -136,26 +120,22 @@ object Retrieval {
     * then probe with `queries`. For repeated probes over a frozen corpus
     * use the postings store ([[buildPostingsStore]]/[[bm25Serve]]).
     *
-    * OPT r20 (guide §1.2, VERDICT r19 #5): postings and the two corpus
-    * statistics come out of ONE tokenize pass instead of two. The exploded
-    * aggregate uses `explode_outer`, so a zero-token document still yields
-    * one (id, len=0, null-term) row — (nDocs, sumLen) read off the
-    * materialized table exactly as [[corpusStats]] measured them (the
-    * zero-token-doc case that made deriving stats from plain postings a
-    * semantics change), and the null-term rows are filtered before scoring,
-    * leaving the postings row set identical to [[postings]]'. */
+    * Contract: `idCol` is unique in `corpus`. Postings and the two corpus
+    * statistics come out of ONE tokenize pass keyed by id, so rows sharing
+    * an id are not separate documents: their term counts add up, and
+    * nDocs/sumLen count each distinct (id, token count) pair once. The
+    * exploded aggregate uses `explode_outer`, so a zero-token document
+    * still yields one (id, len=0, null-term) row and counts toward nDocs;
+    * the null-term rows are filtered before scoring, leaving the postings
+    * row set identical to [[postings]]'. */
   def bm25TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                textCol: String, qidCol: String, qtextCol: String,
                topK: Int, k1: Double = 1.2, b: Double = 0.75,
                maxDfFrac: Double = 0.5,
-               tokenizer: Column => Column = TextStats.tokens,
-               checkpoint: CheckpointStrategy =
-                 CheckpointStrategy.Local): DataFrame = {
-    val (post, n, sl) = postingsWithStats(corpus, idCol, textCol, tokenizer,
-      CheckpointStrategy.materializer(checkpoint))
+               tokenizer: Column => Column = TextStats.tokens): DataFrame = {
+    val (post, n, sl) = postingsWithStats(corpus, idCol, textCol, tokenizer)
     bm25FromPostings(post, n, sl,
-      queries, qidCol, qtextCol, topK, k1, b, maxDfFrac, tokenizer,
-      checkpoint)
+      queries, qidCol, qtextCol, topK, k1, b, maxDfFrac, tokenizer)
   }
 
   /** The one-pass core shared by [[bm25TopK]] / [[buildPostingsStore]] /
@@ -166,9 +146,8 @@ object Retrieval {
     * their row set is exactly [[postings]]'. */
   private def postingsWithStats(corpus: DataFrame, idCol: String,
                                 textCol: String,
-                                tokenizer: Column => Column,
-                                cp: DataFrame => DataFrame): (DataFrame, Long, Long) = {
-    val withSentinels = cp(corpus
+                                tokenizer: Column => Column): (DataFrame, Long, Long) = {
+    val withSentinels = Checkpoint.materialize(corpus
       .select(col(idCol).as("id"),
         TextStats.pinnedCol(tokenizer(coalesce(col(textCol), lit("")))).as("__t"))
       .select(col("id"), size(col("__t")).cast("long").as("len"),
@@ -211,18 +190,17 @@ object Retrieval {
     * `analyzer` is a caller-chosen tag naming the tokenizer. Appends and
     * serves must present the same tag: the postings rows cannot reveal
     * which analyzer produced them, so the tag is the guard against mixing
-    * token spaces (the sketch store's frozen-params rule). */
+    * token spaces (the sketch store's frozen-params rule).
+    *
+    * Same unique-id contract as [[bm25TopK]]: the frozen statistics count
+    * each distinct id once. */
   def buildPostingsStore(corpus: DataFrame, idCol: String, textCol: String,
                          name: String, analyzer: String = "ws-lower",
-                         tokenizer: Column => Column = TextStats.tokens,
-                         checkpoint: CheckpointStrategy =
-                           CheckpointStrategy.Local): Unit = {
+                         tokenizer: Column => Column = TextStats.tokens): Unit = {
     val spark = corpus.sparkSession
-    // OPT r20: one tokenize pass feeds both the stored postings and the
-    // frozen statistics (see postingsWithStats) — the separate corpusStats
-    // pass tokenized the whole corpus a second time
-    val (post, n, sl) = postingsWithStats(corpus, idCol, textCol, tokenizer,
-      CheckpointStrategy.materializer(checkpoint))
+    // one tokenize pass feeds both the stored postings and the frozen
+    // statistics (see postingsWithStats)
+    val (post, n, sl) = postingsWithStats(corpus, idCol, textCol, tokenizer)
     graft.sources.IO.dropOrphanedLocation(spark, s"${name}_meta")
     graft.sources.IO.dropOrphanedLocation(spark, s"${name}_postings")
     post
@@ -267,8 +245,7 @@ object Retrieval {
         s"'${meta("analyzer")}' for '$name' — postings built with a " +
         "different tokenizer cannot share a term space")
     // OPT r20: one tokenize pass over the shard (see postingsWithStats)
-    val (post, n2, sl2) = postingsWithStats(shard, idCol, textCol, tokenizer,
-      CheckpointStrategy.materializer(CheckpointStrategy.Local))
+    val (post, n2, sl2) = postingsWithStats(shard, idCol, textCol, tokenizer)
     post
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .saveAsTable(s"${name}_postings")
@@ -297,17 +274,14 @@ object Retrieval {
                 qidCol: String, qtextCol: String, topK: Int,
                 k1: Double = 1.2, b: Double = 0.75, maxDfFrac: Double = 0.5,
                 analyzer: String = "ws-lower",
-                tokenizer: Column => Column = TextStats.tokens,
-                checkpoint: CheckpointStrategy =
-                  CheckpointStrategy.Local): DataFrame = {
+                tokenizer: Column => Column = TextStats.tokens): DataFrame = {
     val meta = readPostingsMeta(spark, name)
     require(meta("analyzer") == analyzer,
       s"probe analyzer '$analyzer' != frozen store analyzer " +
         s"'${meta("analyzer")}' for '$name'")
     bm25FromPostings(spark.table(s"${name}_postings"),
       meta("n_docs").toLong, meta("sum_len").toLong,
-      queries, qidCol, qtextCol, topK, k1, b, maxDfFrac, tokenizer,
-      checkpoint)
+      queries, qidCol, qtextCol, topK, k1, b, maxDfFrac, tokenizer)
   }
 
   // ---------------------------------------------------------------------

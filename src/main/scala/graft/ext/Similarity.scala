@@ -160,9 +160,9 @@ object Similarity {
     * inside the exploded array would re-evaluate it per band — generators
     * have no common-subexpression elimination). Shared by the pairs and
     * top-k LSH paths. */
-  private def bandedIds(df: DataFrame, idOut: String, vecName: String,
-                        bits: Int, bands: Int, mix: Boolean,
-                        thresholds: Seq[Long]): DataFrame =
+  private[graft] def bandedIds(df: DataFrame, idOut: String, vecName: String,
+                               bits: Int, bands: Int, mix: Boolean,
+                               thresholds: Seq[Long]): DataFrame =
     bandedRows(df, Seq(idOut), vecName, bits, bands, mix, thresholds)
 
   /** [[bandedIds]] generalized to carry arbitrary columns through the band
@@ -354,7 +354,7 @@ object Similarity {
     // k-means iterates over the prepared projection; materialize once.
     // The first-K path reads it twice (pivot filter + assignment scan) —
     // cheap enough to leave to the planner at build time.
-    val c = if (kmeansIters.isDefined) c0.localCheckpoint() else c0
+    val c = if (kmeansIters.isDefined) Checkpoint.materialize(c0) else c0
     val pv = kmeansIters match {
       case Some(iters) =>
         kmeansLloyd(c, nCells, iters).toDF("pid", "pv")
@@ -462,7 +462,7 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val c0 = prepared(corpus, idCol, vecCol).filter(col("nrm") > 0.0)
-    val c = if (kmeansIters.isDefined) c0.localCheckpoint() else c0
+    val c = if (kmeansIters.isDefined) Checkpoint.materialize(c0) else c0
     val pv = kmeansIters match {
       case Some(iters) =>
         kmeansLloyd(c, nCells, iters).toDF("pid", "pv")
@@ -549,7 +549,7 @@ object Similarity {
     * mean would let one large-magnitude member drag the centroid). Each
     * round collects K×dims doubles (broadcast-sized driver statistics, like
     * [[centerThresholds]]); a cell left empty keeps its previous centroid.
-    * The prepared corpus projection is localCheckpoint'ed once so the
+    * The prepared corpus projection is materialized once so the
     * upstream (possibly an expensive decode/embed pipeline) runs once, not
     * once per iteration — same rationale as [[Dedup.nearDupClusters]]'s
     * per-round checkpoint. Returns (pid, centroid) rows.
@@ -566,7 +566,7 @@ object Similarity {
     * deterministic first-K-pivot variant. */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int = 5): Seq[(Long, Array[Float])] =
-    kmeansLloyd(prepared(corpus, idCol, vecCol).localCheckpoint(), k, iters)
+    kmeansLloyd(Checkpoint.materialize(prepared(corpus, idCol, vecCol)), k, iters)
 
   private def kmeansLloyd(p0: DataFrame, k: Int,
                           iters: Int): Seq[(Long, Array[Float])] = {
@@ -641,7 +641,7 @@ object Similarity {
                        nProbe: Int = 4, iters: Int = 5): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = prepared(corpus, idCol, vecCol).localCheckpoint()
+    val c = Checkpoint.materialize(prepared(corpus, idCol, vecCol))
     val cent = kmeansLloyd(c, nCells, iters)
     val pv = cent.toDF("pid", "pv")
       .withColumn("pnrm", sqrt(graft.funcs.VectorFunctions.dotF(col("pv"), col("pv"))))
@@ -748,37 +748,20 @@ object Similarity {
     * degenerate buckets; see [[DefaultMaxBucketSize]]. Pass `None` to
     * disable.
     *
-    * `checkpoint`: the prepared (id, vector, norm) projection is read by four
-    * downstream subplans (both candidate-join sides and both re-rank sides),
-    * plus the centering statistics pass — Spark re-executes the upstream for
-    * each. When the upstream is an expensive decode/embed pipeline, pass
-    * `Some(strategy)` to materialize the projection ONCE before fan-out
-    * ([[CheckpointStrategy.Local]] in local/interactive runs,
-    * [[CheckpointStrategy.Reliable]] on a real cluster — same dial as
-    * [[Dedup.nearDupClusters]]). Default `None` keeps today's recompute
-    * behavior, which measured cheaper when the upstream is a plain parquet
-    * scan. */
+    * The prepared (id, vector, norm) projection is read by up to four
+    * consumers (the auto-bits count, the banding pass and both re-rank
+    * sides), and the capped band rows by both candidate self-join sides, so
+    * both are materialized once through [[Checkpoint.materialize]]: an
+    * expensive decode/embed upstream runs exactly once. */
   def cosineLshPairs(df: DataFrame, idCol: String, vecCol: String,
                      minCos: Double, bits: Int = 0, bands: Int = 8,
                      center: Boolean = false,
-                     maxBucketSize: Option[Int] = Some(DefaultMaxBucketSize),
-                     checkpoint: Option[CheckpointStrategy] = None): DataFrame = {
-    // OPT r19: the prepared projection feeds up to four consumers (the
-    // auto-bits count, the banding pass, and both exact-confirm sides) —
-    // materialize it unconditionally; an explicit `checkpoint` strategy
-    // upgrades the materialization to a reliable one on a cluster.
-    // r20 (ADVICE r19): ONE materializer for every site in this operator —
-    // the band rows below used to hard-code localCheckpoint, silently
-    // weakening a caller's Reliable contract mid-function.
-    val m: DataFrame => DataFrame = checkpoint match {
-      case Some(cs) => CheckpointStrategy.materializer(cs)
-      case None => _.localCheckpoint()
-    }
-    val p = m(prepared(df, idCol, vecCol))
+                     maxBucketSize: Option[Int] = Some(DefaultMaxBucketSize)): DataFrame = {
+    val p = Checkpoint.materialize(prepared(df, idCol, vecCol))
     // bits <= 0 → AUTO: size the signature from the measured corpus count
     // so the n²·b·2⁻ʳ random-collision term is bounded by the engine, not
-    // by operator knowledge (costs one count job over the prepared
-    // projection — pass `checkpoint` if the upstream is expensive)
+    // by operator knowledge (costs one count job over the materialized
+    // prepared projection)
     val useBits = if (bits > 0) bits else autoSignatureBits(p.count(), bands)
     val thresholds: Seq[Long] = if (center) centerThresholds(p, useBits) else Nil
     // plane family: the ANSI-SQL-mirrorable LCG family is an arithmetic
@@ -789,9 +772,9 @@ object Similarity {
     // < 1e-7). Any multi-word signature therefore uses the splitmix64 family.
     val mix = center || useBits > 64
     val banded = bandedIds(p, "id", "v", useBits, bands, mix, thresholds)
-    // OPT r19: both candidate self-join sides consume the capped band rows
-    // — skinny (id, bk) keys, materialized once (the lshCandidates posture)
-    val guarded = m(Dedup.capBuckets(banded, maxBucketSize))
+    // both candidate self-join sides consume the capped band rows — skinny
+    // (id, bk) keys, materialized once (the lshCandidates posture)
+    val guarded = Checkpoint.materialize(Dedup.capBuckets(banded, maxBucketSize))
     val cands = guarded.as("a").join(guarded.as("b"),
         col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
@@ -848,13 +831,11 @@ object Similarity {
   def incrementalCosine(newDf: DataFrame, seenDf: DataFrame, idCol: String,
                         vecCol: String, minCos: Double, bits: Int = 64,
                         bands: Int = 8, expectedSeen: Option[Long] = None,
-                        fpp: Double = 0.01,
-                        checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                        fpp: Double = 0.01): DataFrame = {
     // OPT r19: the seen-side band keys feed the Bloom build (plus its
     // sizing count when expectedSeen is absent) AND the confirm join —
-    // materialized once, the incrementalMinhash seenBk posture; r20: the
-    // materialization honors `checkpoint` (Reliable on a cluster)
-    val seenKeys = CheckpointStrategy.materializer(checkpoint)(
+    // materialized once, the incrementalMinhash seenBk posture
+    val seenKeys = Checkpoint.materialize(
       vectorBandKeys(seenDf, vecCol, bits, bands))
     val bytes = Dedup.serializedBloom(Dedup.buildLongBloom(
       seenKeys.select(col("__fp")), "__fp",
@@ -915,18 +896,15 @@ object Similarity {
   def semanticPairs(corpus: DataFrame, idCol: String, vecCol: String,
                     minCos: Double, nCells: Int = 0,
                     blocks: Int = 4,
-                    kmeansIters: Option[Int] = None,
-                    checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame =
+                    kmeansIters: Option[Int] = None): DataFrame =
     // OPT r19: both sides of the intra-cell self-join consume the assigned
     // table, and their sub-cell explodes differ, so no exchange is reused
     // — un-materialized, the corpus prep + pivot assignment ran twice.
     // (The indexed path, semanticPairsIndexed, reads a persisted table and
     // deliberately does NOT checkpoint — a table scan is already cheap.)
-    // r20: the materialization honors `checkpoint` (Reliable on a cluster).
     pairsWithinCells(
-      CheckpointStrategy.materializer(checkpoint)(
-        semanticAssigned(corpus, idCol, vecCol, nCells, kmeansIters,
-          checkpoint)),
+      Checkpoint.materialize(
+        semanticAssigned(corpus, idCol, vecCol, nCells, kmeansIters)),
       minCos, blocks)
 
   /** The intra-cell pair half of [[semanticPairs]] over an already-assigned
@@ -973,11 +951,9 @@ object Similarity {
     * repeated-epoch semantic dedup. */
   def semanticDedupIndexed(spark: org.apache.spark.sql.SparkSession,
                            name: String, corpus: DataFrame, idCol: String,
-                           minCos: Double = 0.95, blocks: Int = 4,
-                           checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                           minCos: Double = 0.95, blocks: Int = 4): DataFrame = {
     val drops = Dedup.nearDupClusters(
-        semanticPairsIndexed(spark, name, minCos, blocks),
-        checkpoint = checkpoint)
+        semanticPairsIndexed(spark, name, minCos, blocks))
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
     corpus.join(drops, Seq(idCol), "left_anti")
@@ -992,16 +968,14 @@ object Similarity {
     * same posture as [[cosineLshPairs]]'s auto signature width). */
   private def semanticAssigned(corpus: DataFrame, idCol: String,
                                vecCol: String, nCells: Int,
-                               kmeansIters: Option[Int],
-                               checkpoint: CheckpointStrategy =
-                                 CheckpointStrategy.Local): DataFrame = {
+                               kmeansIters: Option[Int]): DataFrame = {
     val c0 = prepared(corpus, idCol, vecCol)
     // k-means iterates over the prepared projection, and the auto-sizing
     // count would otherwise be a second full upstream pass before the
     // assignment scan: materialize it once for either multi-pass consumer
     // (same reasoning as annIvfKMeansTopK's checkpoint)
     val c = if (kmeansIters.isDefined || nCells <= 0)
-      CheckpointStrategy.materializer(checkpoint)(c0) else c0
+      Checkpoint.materialize(c0) else c0
     val k = if (nCells > 0) nCells else autoNCells(c.count())
     val pv = kmeansIters match {
       case Some(it) =>
@@ -1077,21 +1051,19 @@ object Similarity {
     * tiny-manifest discipline, never the corpus). */
   def contrastiveTriplets(corpus: DataFrame, idCol: String, vecCol: String,
                           posMin: Double, negMax: Double,
-                          nCells: Int = 0, blocks: Int = 4,
-                          checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                          nCells: Int = 0, blocks: Int = 4): DataFrame = {
     require(posMin > negMax,
       s"posMin ($posMin) must exceed negMax ($negMax) — the bands may not overlap")
-    val m = CheckpointStrategy.materializer(checkpoint)
     val c0 = prepared(corpus, idCol, vecCol).filter(col("nrm") > 0)
-    val c = if (nCells <= 0) m(c0) else c0
+    val c = if (nCells <= 0) Checkpoint.materialize(c0) else c0
     val k = if (nCells > 0) nCells else autoNCells(c.count())
     // OPT r19: the assignment feeds FOUR consumers (both self-join sides,
     // the cell-ordinal table, and the anchor/easy-negative chain); with an
     // explicit nCells nothing upstream was materialized, so each consumer
     // re-ran the corpus prep + pivot assignment from the scan up — the
     // q196 plan audit counted 24 parquet scans. One materialization of
-    // (id, v, nrm, cell) replaces them all; r20: it honors `checkpoint`.
-    val assigned = m(assignCells(c, firstIdPivots(c, k)))
+    // (id, v, nrm, cell) replaces them all.
+    val assigned = Checkpoint.materialize(assignCells(c, firstIdPivots(c, k)))
     // all in-cell pairs: the band filters cannot prune the pair join (the
     // hard negative is an argmax over the LOW band), so minCos admits all
     val directed = pairsWithinCells(assigned, -1.01, blocks)
@@ -1163,7 +1135,7 @@ object Similarity {
     val c0 = prepared(corpus, idCol, vecCol)
     // checkpoint for the same two multi-pass consumers as semanticAssigned:
     // Lloyd rounds, and the auto-sizing count before the assignment scan
-    val c = if (kmeansIters.isDefined || nCells <= 0) c0.localCheckpoint() else c0
+    val c = if (kmeansIters.isDefined || nCells <= 0) Checkpoint.materialize(c0) else c0
     val k = if (nCells > 0) nCells else autoNCells(c.count())
     val pv = kmeansIters match {
       case Some(it) =>
@@ -1202,11 +1174,10 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     minCos: Double = 0.95, nCells: Int = 0,
                     blocks: Int = 4,
-                    kmeansIters: Option[Int] = None,
-                    checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                    kmeansIters: Option[Int] = None): DataFrame = {
     val pairs = semanticPairs(corpus, idCol, vecCol, minCos, nCells, blocks,
-      kmeansIters, checkpoint)
-    val drops = Dedup.nearDupClusters(pairs, checkpoint = checkpoint)
+      kmeansIters)
+    val drops = Dedup.nearDupClusters(pairs)
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
     corpus.join(drops, Seq(idCol), "left_anti")
@@ -1253,19 +1224,18 @@ object Similarity {
     * rounded value — and therefore the keep set — replays exactly in SQL.
     * Appends `vec_norm`; returns only surviving rows. */
   def filterByNormBand(df: DataFrame, idCol: String, vecCol: String,
-                       dropLowFrac: Double = 0.0, dropHighFrac: Double = 0.0,
-                       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                       dropLowFrac: Double = 0.0, dropHighFrac: Double = 0.0): DataFrame = {
     require(dropLowFrac >= 0.0 && dropHighFrac >= 0.0 &&
       dropLowFrac + dropHighFrac < 1.0,
       s"drop fractions must be >= 0 and sum < 1, got low=$dropLowFrac high=$dropHighFrac")
-    val scored = CheckpointStrategy.materializer(checkpoint)(
+    val scored = Checkpoint.materialize(
       df.withColumn("vec_norm", round(l2Norm(toDouble(col(vecCol))), 6)))
     val hist = scored.groupBy(col("vec_norm")).agg(count(lit(1)).as("__c"))
     // cumulative counts via the two-phase distributed prefix sum — a
     // partitionless Window.orderBy would funnel the whole distinct-norm
     // histogram through one task at scale (see Corpus.prefixSum).
-    val cum = Corpus.prefixSum(hist, "vec_norm", "__c", "__cum", checkpoint)
-      .localCheckpoint()
+    val cum = Corpus.prefixSum(hist, "vec_norm", "__c", "__cum")
+      .transform(Checkpoint.materialize)
     if (cum.isEmpty) return scored
     val n = cum.agg(max(col("__cum"))).head().getLong(0)
     val lowN = math.floor(n * dropLowFrac)

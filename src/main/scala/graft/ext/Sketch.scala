@@ -158,7 +158,7 @@ object Sketch {
         TextStats.pinnedCol(TextStats.tokens(coalesce(col(textCol), lit("")))).as("__t"))
       .select(col("g"), explode(col("__t")).as("tok"))
     // groups·m rows; feeds per-group estimates AND every pair join
-    val sk = hllSketch(toks, Seq("g"), col("tok"), m, salt).localCheckpoint()
+    val sk = hllSketch(toks, Seq("g"), col("tok"), m, salt).transform(Checkpoint.materialize)
     val est = hllEstimate(sk, Seq("g"), m)
       .select(col("g"), col("est_distinct"))
     val pairs = est.select(col("g").as("src_a")).distinct()
@@ -282,7 +282,7 @@ object Sketch {
     // k rows, but the lineage embeds the sketch + candidate passes and
     // feeds TWO consumers (the exact semi-join and the final join) —
     // materialize so the corpus pipeline runs once
-    val winners = topK.select(col("tok"), col("est_count")).localCheckpoint()
+    val winners = topK.select(col("tok"), col("est_count")).transform(Checkpoint.materialize)
     val exact = toks.join(broadcast(winners.select(col("tok"))), Seq("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("exact_count"))
     winners.join(exact, Seq("tok"), "left")
@@ -384,16 +384,6 @@ object Sketch {
         ((col("lo") + col("lo") + col("w") - 1).cast("double") / lit(2.0))
           .as("est_mid"): _*)
   }
-
-  /** Per-group TOKEN-COUNT quantiles — document-length audit (packing
-    * budgets, truncation policy) with bounded state: bucket each doc's
-    * token count, sketch, estimate. */
-  def tokenCountQuantiles(df: DataFrame, textCol: String, groupCol: String,
-                          qs: Seq[Double], subBits: Int = 5): DataFrame =
-    logHistQuantiles(
-      logHistSketch(df, Seq(groupCol),
-        size(TextStats.tokens(coalesce(col(textCol), lit("")))), subBits),
-      Seq(groupCol), qs)
 
   /** Length-outlier TRIM terminal — the standard cleaning stage (drop the
     * truncated stubs and the run-on monsters) with per-group cutoffs
@@ -526,8 +516,7 @@ object Sketch {
     * inclusion-exclusion (which estimates |A∩B|) with the resemblance
     * ratio LSH-style dedup scoping actually thresholds on. */
   def tokenResemblance(df: DataFrame, textCol: String, groupCol: String,
-                       k: Int = 256, salt: String = "graft:bk",
-                       checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                       k: Int = 256, salt: String = "graft:bk"): DataFrame = {
     val toks = df.select(col(groupCol),
         TextStats.pinnedCol(TextStats.tokens(coalesce(col(textCol), lit(""))))
           .as("__t"))
@@ -537,9 +526,9 @@ object Sketch {
     // consumers (group list + both pair-scoped sides) — and EACH recompute
     // re-runs both corpus tokenize passes (HLL guard + survivor rank). The
     // q150 plan audit showed 12 parquet scans; checkpointing the tiny
-    // sketch cuts the corpus passes from 6 to 2. r20: honors `checkpoint`.
+    // sketch cuts the corpus passes from 6 to 2.
     bottomKResemblance(
-      CheckpointStrategy.materializer(checkpoint)(
+      Checkpoint.materialize(
         bottomKSketch(toks, Seq(groupCol), col("tok"), k, salt)),
       groupCol, k)
   }
@@ -629,7 +618,7 @@ object Sketch {
     }
     // materialize BEFORE touching the catalog: the merged plan reads the
     // table it is about to replace
-    val out = merged.localCheckpoint()
+    val out = Checkpoint.materialize(merged)
     graft.sources.IO.dropOrphanedLocation(spark, s"${name}_sketch_tmp")
     out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(s"${name}_sketch_tmp")
@@ -671,14 +660,14 @@ object Sketch {
         TextStats.pinnedCol(TextStats.tokens(coalesce(col(textCol), lit(""))))
           .as("__t"))
       .select(explode(col("__t")).as("tok"))
-      .localCheckpoint() // feeds the HLL, guard and bottom-k passes
+      .transform(Checkpoint.materialize) // feeds the HLL, guard and bottom-k passes
 
     // ---- HLL vocabulary: store registers vs one incoming sketch --------
     val newHll = hllSketch(toks.withColumn("__g", lit("new")), Seq("__g"),
-      col("tok"), m, hp("salt")).drop("__g").localCheckpoint()
+      col("tok"), m, hp("salt")).drop("__g").transform(Checkpoint.materialize)
     val estSrc = hllEstimate(hllSk, Seq(srcCol), m)
       .select(col(srcCol), col("est_distinct").as("est_vocab_src"))
-      .localCheckpoint() // sources-sized; feeds scoping joins below
+      .transform(Checkpoint.materialize) // sources-sized; feeds scoping joins below
     val estNew = hllEstimate(newHll.withColumn("__g", lit("new")), Seq("__g"), m)
       .select(col("est_distinct").as("est_vocab_new"))
     val srcs = estSrc.select(col(srcCol))
@@ -714,7 +703,7 @@ object Sketch {
       .select(md5(concat(col("tok"), lit(":" + bp("salt")))).as("hv"))
       .filter(conv(substring(col("hv"), 1, 8), 16, 10).cast("long") < thr)
       .distinct().orderBy(col("hv")).limit(k)
-      .localCheckpoint()
+      .transform(Checkpoint.materialize)
     val pairU = srcs
       .crossJoin(broadcast(newBk.select(col("hv"), lit(1L).as("__inb"))))
       .join(bkSk.select(col(srcCol), col("hv"), lit(1L).as("__ina")),

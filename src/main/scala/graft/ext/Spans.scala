@@ -171,7 +171,7 @@ object Spans {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     val fp = winnowFingerprints(df, idCol, textCol, k, w)
       .select(col(idCol), col("fp")).distinct()
-      .localCheckpoint() // feeds the df cap AND both join sides
+      .transform(Checkpoint.materialize) // feeds the df cap AND both join sides
     val keep = fp.groupBy(col("fp")).agg(count(lit(1)).as("__d"))
       .filter(col("__d") <= maxDocFreq).select(col("fp"))
     val kept = fp.join(keep, Seq("fp"), "left_semi")

@@ -150,8 +150,7 @@ object Unigram {
     * skinny (id, pos, word) shuffle and one word-keyed join. */
   def unigramEncode(df: DataFrame, idCol: String, textCol: String,
                     model: Seq[(String, Long)],
-                    maxPieceLen: Int = 4,
-                    checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+                    maxPieceLen: Int = 4): DataFrame = {
     require(model.nonEmpty, "unigramEncode needs a non-empty model")
     require(maxPieceLen >= 1, s"maxPieceLen must be >= 1, got $maxPieceLen")
     val spark = df.sparkSession
@@ -160,7 +159,7 @@ object Unigram {
     // the exploded token table feeds TWO consumers (the distinct-word DP
     // pipeline and the per-doc reassembly join) -- materialize it so the
     // text column is scanned and pre-tokenized once
-    val toks = CheckpointStrategy.materializer(checkpoint)(df
+    val toks = Checkpoint.materialize(df
       .select(col(idCol).as("__id"),
         posexplode(filter(TextStats.bpeTokens(coalesce(col(textCol), lit(""))),
           t => !t.rlike("^\\s+$"))).as(Seq("__pos", "__w"))))

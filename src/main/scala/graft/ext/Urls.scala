@@ -195,29 +195,27 @@ object Urls {
     *
     * Scale shape: each round is ONE host-keyed shuffle join of the
     * host-sized rank table against the edge list plus one aggregate;
-    * lineage is truncated per round ([[CheckpointStrategy]]); driver state
+    * lineage is truncated per round ([[Checkpoint.materialize]]); driver state
     * is two longs per round (node count, dangling mass) — never a rank
     * vector. Fixed iteration count, no convergence collect. */
-  def hostRank(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85,
-               checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+  def hostRank(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
-    val cp = CheckpointStrategy.materializer(checkpoint)
     // distinct edges: multigraph multiplicities would double-count links
-    val e = cp(edges.select(col("src"), col("dst")).distinct())
+    val e = Checkpoint.materialize(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("host"))
       .unionByName(e.select(col("dst").as("host"))).distinct()
     val outdeg = e.groupBy(col("src").as("host"))
       .agg(count(lit(1)).as("outdeg"))
-    var ranks = cp(nodes.join(outdeg, Seq("host"), "left")
+    var ranks = Checkpoint.materialize(nodes.join(outdeg, Seq("host"), "left")
       .select(col("host"),
         coalesce(col("outdeg"), lit(0L)).cast("long").as("outdeg"),
         lit(0L).as("r6")))
     val n = ranks.count()
     require(n > 0, "hostRank needs a non-empty edge list")
     val base = ((100L - dampingPct) * 10000L) / n // (1−d)/N in micro-units
-    ranks = cp(ranks.withColumn("r6", lit(1000000L / n)))
+    ranks = Checkpoint.materialize(ranks.withColumn("r6", lit(1000000L / n)))
     for (_ <- 1 to iters) {
       val dang = ranks.filter(col("outdeg") === 0L)
         .agg(coalesce(sum(col("r6")), lit(0L))).head().getLong(0)
@@ -226,7 +224,7 @@ object Urls {
         .join(e.as("e"), col("r.host") === col("e.src"))
         .select(col("e.dst").as("host"), expr("r6 div outdeg").as("__c6"))
         .groupBy(col("host")).agg(sum(col("__c6")).as("__in6"))
-      ranks = cp(ranks.join(in, Seq("host"), "left")
+      ranks = Checkpoint.materialize(ranks.join(in, Seq("host"), "left")
         .select(col("host"), col("outdeg"),
           (lit(base) + expr(s"($dampingPct * (coalesce(__in6, 0L) + " +
             s"${redis}L)) div 100")).as("r6")))

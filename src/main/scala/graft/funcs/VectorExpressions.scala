@@ -521,6 +521,23 @@ private[funcs] object Round6 {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 }
 
+/** The input contract of the PQ expressions below: a vector is encodable
+  * only when it has exactly `dims` elements and none of them is null.
+  * Anything else (a short or long vector, a null element) makes the
+  * expression return null instead of reading past the array or through a
+  * null slot. */
+private[funcs] object VecInput {
+  def fits(input: ArrayData, dims: Int): Boolean = {
+    if (input.numElements() != dims) return false
+    var j = 0
+    while (j < dims) {
+      if (input.isNullAt(j)) return false
+      j += 1
+    }
+    true
+  }
+}
+
 /** Codegen'd PQ encode (OPT r20, guide §1.2 "per-task work"): for each of
   * the `cb.length` subspaces, the argmin over that subspace's centroids of
   * the 6-dp-rounded in-order squared L2 — strictly-smaller replaces, so the
@@ -533,11 +550,16 @@ private[funcs] object Round6 {
   * (Spark's own round(_, 6) double path).
   *
   * `cb(sub)(code) = centroid` — sub- and code-ordered, the packed-codebook
-  * layout. Input element type float or double (decided at bind time). */
+  * layout. Input element type float or double (decided at bind time).
+  * A vector whose length is not the codebook's total dimension, or that
+  * holds a null element, encodes to null ([[VecInput]]). */
 case class PqEncodeCodes(child: Expression, cb: Array[Array[Array[Double]]])
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = true
+
+  private val dims = cb.map(_(0).length).sum
 
   private def elemType: DataType = child.dataType match {
     case ArrayType(et, _) => et
@@ -565,6 +587,7 @@ case class PqEncodeCodes(child: Expression, cb: Array[Array[Array[Double]]])
       java.util.Arrays.deepHashCode(cb.asInstanceOf[Array[AnyRef]])
 
   def encode(input: ArrayData): ArrayData = {
+    if (!VecInput.fits(input, dims)) return null
     val isFloat = elemType == FloatType
     val m = cb.length
     val codes = new Array[Int](m)
@@ -603,7 +626,8 @@ case class PqEncodeCodes(child: Expression, cb: Array[Array[Array[Double]]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("pqEncodeExpr", this,
       classOf[PqEncodeCodes].getName)
-    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.encode($v);")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = $ref.encode($v);\n${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeCodes =
@@ -668,11 +692,18 @@ case class AdcLookupSum(left: Expression, right: Expression)
   * `min_by(struct(__dd, pid))` / rank-window tie-break of the
   * crossJoin-then-aggregate formulation it replaces, without materializing
   * the n·K cross product or shuffling the corpus through the winner
-  * aggregate. Same [[Round6]] rounding as the original `round(d2(v, pv), 6)`. */
+  * aggregate. Same [[Round6]] rounding as the original `round(d2(v, pv), 6)`.
+  * A vector whose length is not the pivots' dimension, or that holds a
+  * null element, has no nearest pivot: null ([[VecInput]]). */
 case class NearestPivotIdx(child: Expression, pvs: Array[Array[Double]])
     extends UnaryExpression {
 
   override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+
+  private val dims = pvs.headOption.fold(0)(_.length)
+
+  def fits(input: ArrayData): Boolean = VecInput.fits(input, dims)
 
   private def elemType: DataType = child.dataType match {
     case ArrayType(et, _) => et
@@ -719,13 +750,16 @@ case class NearestPivotIdx(child: Expression, pvs: Array[Array[Double]])
     bi
   }
 
-  override def nullSafeEval(input: Any): Any =
-    nearest(input.asInstanceOf[ArrayData])
+  override def nullSafeEval(input: Any): Any = {
+    val a = input.asInstanceOf[ArrayData]
+    if (fits(a)) nearest(a) else null
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("nearestPivotExpr", this,
       classOf[NearestPivotIdx].getName)
-    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.nearest($v);")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.isNull} = !$ref.fits($v);\nif (!${ev.isNull}) ${ev.value} = $ref.nearest($v);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestPivotIdx =
@@ -892,7 +926,8 @@ object VectorFunctions {
       org.apache.spark.sql.functions.lit(filter))
 
   /** Column API for the codegen'd PQ encode; `cb(sub)(code) = centroid`
-    * (sub- and code-ordered). Requires [[register]]. */
+    * (sub- and code-ordered). Null for a vector of the wrong length or with
+    * a null element. Requires [[register]]. */
   def pqEncodeCodes(v: Column, cb: Array[Array[Array[Double]]]): Column =
     org.apache.spark.sql.functions.call_function(PqEncodeName, v,
       org.apache.spark.sql.functions.typedlit(
@@ -903,7 +938,8 @@ object VectorFunctions {
     org.apache.spark.sql.functions.call_function(AdcSumName, qtab, codes)
 
   /** Column API for the codegen'd nearest-pivot index (0-based into `pvs`,
-    * which must be in ascending-pid order for the documented tie-break). */
+    * which must be in ascending-pid order for the documented tie-break).
+    * Null for a vector of the wrong length or with a null element. */
   def nearestPivot(v: Column, pvs: Array[Array[Double]]): Column =
     org.apache.spark.sql.functions.call_function(NearestPivotName, v,
       org.apache.spark.sql.functions.typedlit(pvs.map(_.toSeq).toSeq))

@@ -246,7 +246,7 @@ object Streaming {
           // identity materializer: the micro-batch source is already
           // materialized, and per-batch checkpoint blocks would linger
           onFresh(graft.ext.Dedup.dropSeenTypos(batch, idCol, strCol, cat,
-            graft.ext.CheckpointStrategy.Passthrough), id)
+            identity), id)
         ()
       }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,13 +53,16 @@ class ExtSpec extends AnyFunSuite {
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(kept == Set(12L), s"fpp=$fpp kept $kept")
     }
-    // the Reliable (real-FS) checkpoint strategy — the cluster-mode path —
-    // yields the same result; only the lineage-truncation mechanism differs
+    // with a checkpoint dir set (the cluster-mode path) the cuts are
+    // reliable checkpoints under it, and the result is the same
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt-inc").toString
-    val rel = Dedup.incrementalExact(arrivals, seen, "doc_id", "text",
-        checkpoint = CheckpointStrategy.Reliable(ckptDir))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(rel == Set(12L), s"Reliable checkpoint kept $rel")
+    val rel = CheckpointDirs.withCheckpointDir(ckptDir) {
+      Dedup.incrementalExact(arrivals, seen, "doc_id", "text")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    }
+    assert(rel == Set(12L), s"reliable checkpoints kept $rel")
+    assert(CheckpointDirs.files(ckptDir).nonEmpty, "no checkpoint files under the dir")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "checkpoint dir leaked")
     // empty history: everything is fresh
     val all = Dedup.incrementalExact(arrivals, seen.limit(0), "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -246,13 +250,16 @@ class ExtSpec extends AnyFunSuite {
     val got = Dedup.nearDupClusters(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-    // the reliable (fault-tolerant) checkpoint strategy yields identical
-    // clusters — only the lineage-truncation mechanism differs
+    // with a checkpoint dir set, the per-round cuts are reliable
+    // (fault-tolerant) checkpoints under it and the clusters are identical
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val reliable = Dedup.nearDupClusters(pairs,
-        checkpoint = CheckpointStrategy.Reliable(dir)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val reliable = CheckpointDirs.withCheckpointDir(dir) {
+      Dedup.nearDupClusters(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(reliable == got)
+    assert(CheckpointDirs.files(dir).nonEmpty, "no checkpoint files under the dir")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "checkpoint dir leaked")
   }
 
   test("removeNearDups keeps one representative per cluster and all singletons") {
@@ -498,17 +505,14 @@ class ExtSpec extends AnyFunSuite {
       s"expected 1..16 signature evaluations in plan (64 = per-band regression), found $sigCount")
   }
 
-  test("plan shape: cosineLshPairs itself keeps the once-per-side signature projection (Passthrough)") {
-    // ADVICE r19 (low): the r19 checkpoint hid cosineLshPairs's banded rows
-    // from a post-hoc plan scrape, leaving the original surface without
-    // direct coverage. Under CheckpointStrategy.Passthrough NOTHING
-    // materializes, so the operator's full lazy plan is scrapeable again —
-    // same 1..16 bound as the annLshTopK guard (8 words x 2 self-join
-    // sides; 64 would be the per-band re-evaluation regression).
+  test("plan shape: cosineLshPairs band rows keep the once-per-word signature projection") {
+    // cosineLshPairs materializes its band rows, which hides them from a
+    // post-hoc plan scrape of the operator's output; scrape the lazy plan
+    // it materializes instead — same 1..16 bound as the annLshTopK guard
+    // (8 words once each; 32 would be the per-band re-evaluation regression)
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
-    val df = Similarity.cosineLshPairs(e, "vec_id", "embedding", 0.95,
-      bits = 512, bands = 32, center = true,
-      checkpoint = Some(CheckpointStrategy.Passthrough))
+    val df = Similarity.bandedIds(Similarity.prepared(e, "vec_id", "embedding"),
+      "id", "v", bits = 512, bands = 32, mix = true, thresholds = Nil)
     val plan = df.queryExecution.optimizedPlan.toString
     val sigCount = "lshsignaturefloat".r.findAllIn(plan.toLowerCase).length
     assert(sigCount > 0 && sigCount <= 16,
@@ -1609,16 +1613,16 @@ class ExtSpec extends AnyFunSuite {
     assert(report.maxBucket <= 10L && report.cap.contains(10), s"got $report")
   }
 
-  test("cosineLshPairs(checkpoint = Local) executes the upstream exactly once") {
+  test("cosineLshPairs executes the upstream exactly once") {
     // the prepared projection fans out to ~5 subplans; with an expensive
-    // decode/embed upstream the checkpoint dial must make it run once
+    // decode/embed upstream its materialization must make it run once
     val counter = spark.sparkContext.longAccumulator("graft_upstream_rows")
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
     val n = e.count()
     val tick = udf { (id: Long) => counter.add(1L); id }.asNondeterministic()
     val up = e.select(tick(col("vec_id")).as("vec_id"), col("embedding"))
     Similarity.cosineLshPairs(up, "vec_id", "embedding", minCos = 0.95,
-        bits = 256, bands = 16, checkpoint = Some(CheckpointStrategy.Local))
+        bits = 256, bands = 16)
       .write.format("noop").mode("overwrite").save()
     assert(counter.value == n,
       s"upstream evaluated ${counter.value} rows for an $n-row corpus — not once")
@@ -3071,6 +3075,38 @@ class ExtSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fast == legacy)
     assert(fast(100L) == 0L, "rounded-distance tie must keep the smaller pid")
+  }
+
+  test("PQ encode and nearest pivot return null for a short, long or null-holding vector") {
+    import graft.funcs.VectorFunctions
+    VectorFunctions.register(spark)
+    val cb = Array(Array(Array(0.0), Array(2.0)), Array(Array(0.0), Array(2.0)))
+    val pvs = Array(Array(0.0, 0.0), Array(3.0, 3.0))
+    // repartition keeps the projection out of ConvertToLocalRelation, so it
+    // runs through the physical plan: whole-stage codegen (doGenCode), then
+    // interpreted projections (eval)
+    val vecs = Seq(
+      (0L, Seq(Some(1.5), Some(0.1))),
+      (1L, Seq(Some(1.5))),
+      (2L, Seq(Some(1.5), Some(0.1), Some(9.0))),
+      (3L, Seq(Some(1.5), None))).toDF("id", "v").repartition(1)
+    for ((wholeStage, mode) <- Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        val got = vecs.select(col("id"),
+            VectorFunctions.pqEncodeCodes(col("v"), cb).as("codes"),
+            VectorFunctions.nearestPivot(col("v"), pvs).as("cell"))
+          .collect().map(r => r.getLong(0) ->
+            (Option(r.getSeq[Int](1)), Option(r.get(2)))).toMap
+        assert(got(0L) == (Some(Seq(1, 0)), Some(0)), s"$mode: $got")
+        for (id <- Seq(1L, 2L, 3L))
+          assert(got(id) == (None, None), s"$mode: vec $id gave ${got(id)}")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
   }
 
   test("ivfPqTopK: full probe equals flat PQ; partial probe keeps cluster recall") {

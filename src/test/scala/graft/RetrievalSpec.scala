@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,6 +85,26 @@ class RetrievalSpec extends AnyFunSuite {
         analyzer = "bpe")
     }
     assert(ex.getMessage.contains("analyzer"))
+  }
+
+  test("postings store: append cuts lineage through the session's checkpoint dir") {
+    Retrieval.buildPostingsStore(corpus.filter(col("doc_id") < 2), "doc_id",
+      "text", "rtest_ckpt")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-append").toString
+    CheckpointDirs.withCheckpointDir(dir) {
+      Retrieval.appendToPostingsStore(corpus.filter(col("doc_id") >= 2),
+        "doc_id", "text", "rtest_ckpt")
+    }
+    assert(CheckpointDirs.files(dir).nonEmpty, "no checkpoint files under the dir")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "checkpoint dir leaked")
+    // same store as a from-scratch build
+    Retrieval.buildPostingsStore(corpus, "doc_id", "text", "rtest_ckpt_full")
+    def postings(n: String) =
+      spark.table(s"${n}_postings").orderBy("id", "term").collect().toSeq
+    def meta(n: String) = spark.table(s"${n}_meta").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(postings("rtest_ckpt") == postings("rtest_ckpt_full"))
+    assert(meta("rtest_ckpt") == meta("rtest_ckpt_full"))
   }
 
   test("postings store: meta repair recomputes the frozen statistics") {
