@@ -211,23 +211,6 @@ object Bench {
     println(line)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_last.json"), line + "\n")
-    // VERDICT r19 #8: ALSO persist the full line as a per-round artifact —
-    // bench_last.json is overwritten every run, and when a round's captured
-    // log tail is truncated (BENCH_r18) the driver's round-over-round
-    // comparison silently loses its baseline (PERF_r19: n_common 0). Round
-    // number = 1 + the highest driver-written BENCH_rN.json present (the
-    // driver writes this round's copy only after this JVM exits); the cpu
-    // count is in the name so the 32- and 8-core driver runs don't clobber
-    // each other.
-    locally {
-      val rx = "BENCH_r([0-9]+)\\.json".r
-      val maxN = Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .map(_.getName).collect { case rx(n) => n.toInt }
-        .foldLeft(0)(math.max)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"BENCH_r${maxN + 1}_full_c$cpus.json"),
-        line + "\n")
-    }
     // The driver captures only a bounded (~2000-char) tail of stdout; the
     // full line above is ~5 KB at 150+ queries, so every round artifact
     // through r13 recorded parsed:null. Print a SECOND, compact summary as

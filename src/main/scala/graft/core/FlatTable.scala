@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.transforms.{Aggregation, Percentages, Shaping, Totals}
@@ -79,6 +79,32 @@ final case class FlatTable(df: DataFrame, meta: TableMeta) {
         case _ => ()
       }
     }
+
+  /** The rendered rows: the first `maxRows` rows of [[ordered]], collected
+    * once per instance and shared by every display sink (the JSON spec, the
+    * HTML fragment that embeds it, and the xlsx writer), so one report runs
+    * the pivot plan once instead of once per sink. A rendered table is a
+    * SNAPSHOT, like the eager pandas frame it mirrors: a later render of
+    * this instance does not see changes to the source data — re-rendering
+    * those needs a new FlatTable (every transform and `copy` returns one,
+    * with no snapshot).
+    *
+    * Reuse rule: a snapshot collected with limit `L` answers a request for
+    * `n` rows when `n <= L` (its first `n` rows), or when it holds fewer
+    * than `L` rows (it is then the whole table). Any larger request
+    * collects again and replaces it, so the driver keeps at most the
+    * largest `maxRows` requested so far (the xlsx sink defaults to 100000)
+    * for as long as the instance lives. Same posture as [[forked]]:
+    * per instance, never entered in the session CacheManager; concurrent
+    * renders of one instance wait for the one collect. */
+  @transient private[this] var snapshot: (Int, Array[Row]) = _
+
+  private[graft] def presented(maxRows: Int): Array[Row] = synchronized {
+    val reusable = snapshot != null &&
+      (maxRows <= snapshot._1 || snapshot._2.length < snapshot._1)
+    if (!reusable) snapshot = (maxRows, ordered.limit(maxRows).collect())
+    snapshot._2.take(maxRows)
+  }
 
   // ---- canonical ordering ----------------------------------------------
 

@@ -447,7 +447,16 @@ object Quantize {
     * iteration with strict-less replacement reproduces the min_by
     * struct(__dd, pid) tie-break exactly; same 6-dp HALF_UP rounding.
     * Non-integral pid types (no in-repo caller) keep the aggregate path —
-    * driver-side sorting would have to reproduce the engine's collation. */
+    * driver-side sorting would have to reproduce the engine's collation.
+    *
+    * Both paths give the same answer on malformed input: an empty pivot set
+    * yields no rows (the fast path hands it to the crossJoin path), and a
+    * row whose distances are all NaN or infinite is assigned the smallest
+    * pid (NaN sorts above every number, ties keep the smaller pid). A null
+    * vector, or one of the wrong length or with a null element, has no
+    * nearest cell: the fast path returns it with null `cell` and `pv`
+    * (the crossJoin path's pick there is an artifact of nulls sorting
+    * first, not a distance). */
   private[graft] def nearestCellsPq(df: DataFrame, piv: DataFrame,
                                     keep: Int): DataFrame = {
     import org.apache.spark.sql.types._
@@ -455,21 +464,27 @@ object Quantize {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    if (keep == 1 && pidIntegral) {
+    val rows =
+      if (keep == 1 && pidIntegral)
+        piv.select(col("pid"), col("pv")).collect()
+          .sortBy(r => r.get(0) match { case n: java.lang.Number => n.longValue })
+      else Array.empty[org.apache.spark.sql.Row]
+    if (rows.nonEmpty) {
       graft.funcs.VectorFunctions.register(df.sparkSession)
-      val rows = piv.select(col("pid"), col("pv")).collect()
-        .sortBy(r => r.get(0) match { case n: java.lang.Number => n.longValue })
       val pvs = rows.map(_.getSeq[Double](1).toArray)
       val pidArr = array(rows.map(r => lit(r.get(0))): _*)
       val pvArr = array(pvs.map(a => lit(a)): _*)
-      // the index lands in its own projection so the two element_at
-      // consumers below share ONE argmin evaluation (CollapseProject does
-      // not inline non-cheap expressions into multiple uses)
+      // the index lands in its own projection so the two lookups below
+      // share ONE argmin evaluation (CollapseProject does not inline
+      // non-cheap expressions into multiple uses). `get`, not `element_at`:
+      // under ANSI, element_at declares a non-null result for a non-null
+      // array even when the index is null, and a null vector's null index
+      // then fails the row writer
       df.withColumn("__ci",
           graft.funcs.VectorFunctions.nearestPivot(col("v"), pvs))
         .select(col("id"), col("v"),
-          element_at(pidArr, col("__ci") + 1).as("cell"),
-          element_at(pvArr, col("__ci") + 1).as("pv"))
+          get(pidArr, col("__ci")).as("cell"),
+          get(pvArr, col("__ci")).as("pv"))
     } else {
       val scored = df.crossJoin(broadcast(piv))
         .select(col("id"), col("v"), col("pid"),

@@ -116,43 +116,14 @@ object Similarity {
 
   // ---- random-hyperplane LSH -------------------------------------------
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim d):
-    * a multiplicative-hash LCG mapped to the integer range
-    * [-1000001, 1000001]. Pure 64-bit integer arithmetic (no RNG state, no
-    * string hashing) so the identical value is computable in ANSI SQL — the
-    * property the DuckDB correctness oracle relies on. */
-  private def planeComponent(p: Int, d: Column): Column =
-    (lit(p.toLong) * 1000003L + d) * 2654435761L % 2000003L - 1000001L
-
-  /** Quantized vector: floor(x * 10^6) per component. Combined with the
-    * integer plane components, projections become exact integer sums —
-    * order-independent and bit-identical across engines (a floating-point
-    * fold could flip the sign of a near-zero projection depending on
-    * summation order). Magnitudes stay far below 2^63: |x|·10^6 ≲ 10^7,
-    * times 10^6 component, times 64 dims ≈ 10^15. */
-  private def quantized(v: Column): Column =
-    transform(v, x => floor(x.cast("double") * 1000000.0))
-
   /** `bits`-bit random-hyperplane signature of a vector: bit p = sign of the
     * integer projection onto pseudo-random plane p. Delegates to the fused
     * codegen'd [[graft.funcs.LshSignatureFloat]] expression (requires
-    * `VectorFunctions.register`, done by [[prepared]]); the declarative
-    * formulation below is its executable specification. */
+    * `VectorFunctions.register`, done by [[prepared]]); ExtSpec keeps a
+    * declarative higher-order-function formulation as its executable
+    * specification and asserts the two agree bit for bit. */
   def lshSignature(v: Column, bits: Int = 16): Column =
     graft.funcs.VectorFunctions.lshSig(v, bits)
-
-  /** Declarative (higher-order-function) formulation of [[lshSignature]] —
-    * bit-identical by construction; kept as the cross-check spec for the
-    * codegen'd expression (ExtSpec asserts equality). */
-  def lshSignatureDeclarative(v: Column, bits: Int): Column = {
-    val qv = quantized(v)
-    val proj = (p: Int) =>
-      aggregate(zip_with(qv, sequence(lit(0), size(v) - 1),
-          (x, i) => x * planeComponent(p, i)),
-        lit(0L), (acc, x) => acc + x)
-    (0 until bits).map(p => when(proj(p) >= 0, lit(1L << p)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** (idOut, bk) band-key rows of `df` under `bands` bands of bits/bands
     * bits, with the signature words materialized in their own projection

@@ -692,9 +692,13 @@ case class AdcLookupSum(left: Expression, right: Expression)
   * `min_by(struct(__dd, pid))` / rank-window tie-break of the
   * crossJoin-then-aggregate formulation it replaces, without materializing
   * the n·K cross product or shuffling the corpus through the winner
-  * aggregate. Same [[Round6]] rounding as the original `round(d2(v, pv), 6)`.
-  * A vector whose length is not the pivots' dimension, or that holds a
-  * null element, has no nearest pivot: null ([[VecInput]]). */
+  * aggregate. Same [[Round6]] rounding as the original `round(d2(v, pv), 6)`,
+  * and the same ordering of doubles as Spark's: NaN sorts above every
+  * number, so a NaN distance never beats a number and an all-NaN (or
+  * all-infinite) row keeps the FIRST pivot, as `min_by` does. Null when
+  * there is no nearest pivot: an empty pivot set, or a vector whose length
+  * is not the pivots' dimension or that holds a null element ([[VecInput]]).
+  * The result is therefore always null or a valid index into `pvs`. */
 case class NearestPivotIdx(child: Expression, pvs: Array[Array[Double]])
     extends UnaryExpression {
 
@@ -703,7 +707,7 @@ case class NearestPivotIdx(child: Expression, pvs: Array[Array[Double]])
 
   private val dims = pvs.headOption.fold(0)(_.length)
 
-  def fits(input: ArrayData): Boolean = VecInput.fits(input, dims)
+  def fits(input: ArrayData): Boolean = pvs.nonEmpty && VecInput.fits(input, dims)
 
   private def elemType: DataType = child.dataType match {
     case ArrayType(et, _) => et
@@ -744,7 +748,7 @@ case class NearestPivotIdx(child: Expression, pvs: Array[Array[Double]])
         j += 1
       }
       val rd = Round6.round6(d)
-      if (rd < best) { best = rd; bi = i }
+      if (bi < 0 || rd < best || (best.isNaN && !rd.isNaN)) { best = rd; bi = i }
       i += 1
     }
     bi
@@ -939,7 +943,8 @@ object VectorFunctions {
 
   /** Column API for the codegen'd nearest-pivot index (0-based into `pvs`,
     * which must be in ascending-pid order for the documented tie-break).
-    * Null for a vector of the wrong length or with a null element. */
+    * Null for an empty `pvs` or a vector of the wrong length or with a null
+    * element; never an index outside `pvs`. */
   def nearestPivot(v: Column, pvs: Array[Array[Double]]): Column =
     org.apache.spark.sql.functions.call_function(NearestPivotName, v,
       org.apache.spark.sql.functions.typedlit(pvs.map(_.toSeq).toSeq))

@@ -155,7 +155,7 @@ object Excel {
             borderSpecs: Map[String, Seq[String]] = Map.empty): Unit = {
     val meta = ft.meta
     val schema = ft.df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val rows = ft.ordered.limit(maxRows).collect()
+    val rows = ft.presented(maxRows)
     val marginLabels = meta.marginLabelSeq
 
     // auto number formats from smart labels (excel.py:11-45). Excel's true

@@ -11,8 +11,9 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.core.FlatTable
 
 /** Driver-side table spec emitter (reference TableSpecBuilder,
-  * output/html/tablespec.py:14-265): collects the (presentation-sized)
-  * FlatTable and produces the JSON shape consumed by the
+  * output/html/tablespec.py:14-265): reads the (presentation-sized)
+  * FlatTable's collected rows ([[FlatTable.presented]], shared with the
+  * xlsx writer) and produces the JSON shape consumed by the
   * `flatbread-wc-table-display` web component:
   * `{values, columns: {values,names,dtypes,formatOptions},
   *   index: {values,names,dtypes,formatOptions}}`.
@@ -71,7 +72,7 @@ object TableSpec {
             formats: Map[String, Map[String, Any]] = Map.empty): ObjectNode = {
     val meta = ft.meta
     val schema = ft.df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val rows = ft.ordered.limit(maxRows).collect()
+    val rows = ft.presented(maxRows)
 
     val root = mapper.createObjectNode()
 

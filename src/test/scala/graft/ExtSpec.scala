@@ -386,13 +386,35 @@ class ExtSpec extends AnyFunSuite {
     assert(lsh == brute) // r=2, b=24: per-pair miss < 6e-6 at cos 0.4
   }
 
+  /** Declarative (higher-order-function) formulation of
+    * [[Similarity.lshSignature]], bit-identical by construction: the
+    * executable specification of the codegen'd expression. Vectors are
+    * quantized to floor(x * 10^6) per component and plane (p, d) has the
+    * integer component `(p * 1000003 + d) * 2654435761 % 2000003 - 1000001`
+    * (a multiplicative-hash LCG, computable in ANSI SQL), so every
+    * projection is an exact integer sum, order-independent across engines;
+    * magnitudes stay far below 2^63 (|x|·10^6 ≲ 10^7, times 10^6, times 64
+    * dims ≈ 10^15). */
+  private def lshSignatureDeclarative(v: org.apache.spark.sql.Column,
+                                      bits: Int): org.apache.spark.sql.Column = {
+    val qv = transform(v, x => floor(x.cast("double") * 1000000.0))
+    def planeComponent(p: Int, d: org.apache.spark.sql.Column) =
+      (lit(p.toLong) * 1000003L + d) * 2654435761L % 2000003L - 1000001L
+    val proj = (p: Int) =>
+      aggregate(zip_with(qv, sequence(lit(0), size(v) - 1),
+          (x, i) => x * planeComponent(p, i)),
+        lit(0L), (acc, x) => acc + x)
+    (0 until bits).map(p => when(proj(p) >= 0, lit(1L << p)).otherwise(lit(0L)))
+      .reduce((a, b) => a.bitwiseOR(b))
+  }
+
   test("codegen'd LSH signature equals its declarative specification") {
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
     graft.funcs.VectorFunctions.register(spark)
     for (bits <- Seq(16, 48, 64)) {
       val mismatches = e.select(
           Similarity.lshSignature(col("embedding"), bits).as("fast"),
-          Similarity.lshSignatureDeclarative(col("embedding"), bits).as("spec"))
+          lshSignatureDeclarative(col("embedding"), bits).as("spec"))
         .filter(col("fast") =!= col("spec")).count()
       assert(mismatches == 0, s"bits=$bits")
     }
@@ -3075,6 +3097,48 @@ class ExtSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fast == legacy)
     assert(fast(100L) == 0L, "rounded-distance tie must keep the smaller pid")
+  }
+
+  test("nearestCellsPq fast path equals the crossJoin path on empty pivots and NaN or infinite distances") {
+    // the crossJoin+min_by formulation the fast path replaced, verbatim
+    def d2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
+    def legacy(vecs: org.apache.spark.sql.DataFrame,
+               piv: org.apache.spark.sql.DataFrame) =
+      vecs.crossJoin(broadcast(piv))
+        .select(col("id"), col("v"), col("pid"),
+          round(d2(col("v"), col("pv")), 6).as("__dd"), col("pv"))
+        .groupBy(col("id"))
+        .agg(min_by(struct(col("v"), col("pid"), col("pv")),
+          struct(col("__dd"), col("pid"))).as("__w"))
+        .select(col("id"), col("__w.pid").as("cell"), col("__w.pv").as("pv"))
+    // pv compared as text: NaN components must compare equal
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("cell"), col("pv")).collect().map(r =>
+        r.getLong(0) -> (Option(r.get(1)), Option(r.getSeq[Double](2)).map(_.mkString(",")))
+      ).toMap
+    val vecs = Seq(
+      (1L, Array(1.9, 0.1)),
+      (2L, Array(Double.NaN, 0.0)), // every distance NaN
+      (3L, Array(1e200, 0.0))       // every distance +Infinity
+    ).toDF("id", "v")
+    val piv = Seq(
+      (0L, Array(0.0, 0.0)), (1L, Array(2.0, 0.0)), (5L, Array(0.0, 3.0))).toDF("pid", "pv")
+    val fast = cells(Quantize.nearestCellsPq(vecs, piv, 1))
+    assert(fast == cells(legacy(vecs, piv)))
+    assert(fast.map { case (id, (c, _)) => id -> c } ==
+      Map(1L -> Some(1L), 2L -> Some(0L), 3L -> Some(0L)))
+    // a NaN pivot never beats a number, but is the pick when all are NaN
+    val nanPiv = Seq((0L, Array(Double.NaN, 0.0)), (1L, Array(2.0, 0.0))).toDF("pid", "pv")
+    assert(cells(Quantize.nearestCellsPq(vecs, nanPiv, 1)) == cells(legacy(vecs, nanPiv)))
+    // an empty pivot set: no rows on either path
+    val none = piv.filter(lit(false))
+    assert(Quantize.nearestCellsPq(vecs, none, 1).collect().isEmpty)
+    assert(legacy(vecs, none).collect().isEmpty)
+    // no nearest cell for a null or short vector: null cell and pv
+    val bad = Seq((7L, null: Array[Double]), (8L, Array(1.0))).toDF("id", "v")
+    assert(cells(Quantize.nearestCellsPq(bad, piv, 1)) ==
+      Map(7L -> (None, None), 8L -> (None, None)))
   }
 
   test("PQ encode and nearest pivot return null for a short, long or null-holding vector") {

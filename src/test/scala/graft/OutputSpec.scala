@@ -4,6 +4,8 @@ import java.nio.file.Files
 import java.util.zip.ZipFile
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Axis
@@ -11,8 +13,9 @@ import graft.output.{DisplayConfig, Excel, FormatDef, FormatResolver, Formats, H
 import graft.testing.MakeTestDf
 
 /** Presentation sinks: table-spec JSON shape (golden structure), smart format
-  * resolution, the fluent display surface, HTML embedding, and the
-  * zero-dependency XLSX writer with user format/border overrides.
+  * resolution, the fluent display surface, HTML embedding, the
+  * zero-dependency XLSX writer with user format/border overrides, and the
+  * one rendered-rows snapshot per table that all three sinks share.
   */
 class OutputSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -20,6 +23,106 @@ class OutputSpec extends AnyFunSuite {
 
   private def table = MakeTestDf(spark).addTotals(Axis.Both)
     .addPercentages(Axis.Cols, ndigits = 1)
+
+  private val JobTag = "graft.test.jobsOf"
+
+  /** Spark jobs that `body` submits from this thread: a listener counts
+    * the job starts carrying this call's tag, after the bus has drained. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(JobTag) == tag)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(JobTag, tag)
+    try { body; ListenerBusDrain.drain(); n.get }
+    finally { sc.setLocalProperty(JobTag, null); sc.removeSparkListener(listener) }
+  }
+
+  /** The data rows of sheet 1 of an .xlsx (header row skipped), each as
+    * cell text by column index; a null value writes no cell. */
+  private def xlsxRows(path: String, nCols: Int): Seq[Seq[Option[String]]] = {
+    val zip = new ZipFile(path)
+    val sheet = try new String(zip.getInputStream(
+      zip.getEntry("xl/worksheets/sheet1.xml")).readAllBytes())
+      finally zip.close()
+    val rowRx = "(?s)<row r=\"\\d+\">(.*?)</row>".r
+    val cellRx = "(?s)<c r=\"([A-Z]+)\\d+\"[^>]*>(.*?)</c>".r
+    val textRx = "(?s)<(?:v|t[^>]*)>(.*?)</(?:v|t)>".r
+    rowRx.findAllMatchIn(sheet).drop(1).map { row =>
+      val cells = cellRx.findAllMatchIn(row.group(1)).map { c =>
+        val col = c.group(1).foldLeft(0)((acc, ch) => acc * 26 + (ch - 'A' + 1)) - 1
+        col -> textRx.findFirstMatchIn(c.group(2)).get.group(1)
+      }.toMap
+      (0 until nCols).map(cells.get)
+    }.toSeq
+  }
+
+  /** First-level index labels of a table spec, in row order. */
+  private def indexLabels(json: String): Seq[String] = {
+    val idx = mapper.readTree(json).get("index").get("values")
+    (0 until idx.size()).map(i => idx.get(i).get(0).asText())
+  }
+
+  private def text(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
+    if (n.isNull) None else Some(n.asText())
+
+  test("one render: getJson + html + xlsx run the jobs of getJson alone") {
+    val path = Files.createTempFile("flatbread", ".xlsx").toString
+    jobsOf(table.display.getJson()) // warm: first-use planning and classes
+    val once = jobsOf(table.display.getJson())
+    val all = jobsOf {
+      val ft = table // 6 rows, inside both the display and the xlsx limit
+      ft.display.getJson()
+      ft.display.html()
+      Excel.write(ft, path)
+    }
+    assert(once > 0)
+    assert(all == once, s"three sinks ran $all jobs, one sink $once")
+  }
+
+  test("snapshot reuse: a larger maxRows collects again and returns every row, a smaller one reuses") {
+    val ft = MakeTestDf(spark, nRows = 12)
+    val everyRow = ft.ordered.collect().map(_.getString(0)).toSeq
+    def rendered(n: Int) = indexLabels(TableSpec.toJson(ft, n))
+    assert(jobsOf(assert(rendered(5) == everyRow.take(5))) > 0)
+    // 20 > 5: the 5-row snapshot cannot answer, so it collects again
+    assert(jobsOf(assert(rendered(20) == everyRow)) > 0)
+    // 3 <= 20, and 100 > 20 but the 20-row request held all 12 rows
+    assert(jobsOf(assert(rendered(3) == everyRow.take(3))) == 0)
+    assert(jobsOf(assert(rendered(100) == everyRow)) == 0)
+  }
+
+  test("snapshot is per instance: addTotals on a rendered table renders its margin row") {
+    val ft = MakeTestDf(spark)
+    val before = indexLabels(ft.display.getJson())
+    assert(!before.contains("Totals"))
+    val withTotals = indexLabels(ft.addTotals(Axis.Rows).display.getJson())
+    assert(withTotals == before :+ "Totals")
+    assert(indexLabels(ft.display.getJson()) == before)
+  }
+
+  test("the JSON spec and the xlsx data rows agree row for row") {
+    val ft = MakeTestDf(spark, nRows = 8, idxDupes = Seq(2, 1))
+      .addSubtotals(Axis.Rows, Seq(0)).addTotals(Axis.Rows)
+    val spec = mapper.readTree(ft.display.setMaxRows(100).getJson())
+    val path = Files.createTempFile("flatbread", ".xlsx").toString
+    Excel.write(ft, path)
+    val nLevels = ft.meta.nLevels
+    val sheet = xlsxRows(path, nLevels + ft.meta.valueCols.size)
+    val idx = spec.get("index").get("values")
+    val vals = spec.get("values")
+    assert(idx.size() == 8 + 4 + 1 && sheet.size == idx.size())
+    sheet.zipWithIndex.foreach { case (row, i) =>
+      val specRow = (0 until nLevels).map(j => text(idx.get(i).get(j))) ++
+        (0 until vals.get(i).size()).map(j => text(vals.get(i).get(j)))
+      assert(row == specRow, s"row $i")
+    }
+  }
 
   test("spec JSON has the reference shape: values/columns/index with names+dtypes+formatOptions (tablespec.py:22-37)") {
     val spec = mapper.readTree(TableSpec.toJson(table))
