@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Corpus, Dedup, Eval, Multimodal, Quantize, Retrieval, Serving, Similarity, TextStats, Urls}
+import graft.ext.{Checkpoint, Corpus, Dedup, Eval, Multimodal, Quantize, Retrieval, Serving, Similarity, TextStats, Urls}
 import graft.Tables.{read, PresentBy}
 
 /** Training-data-pipeline operator queries (dedup, similarity search, text
@@ -1434,7 +1434,7 @@ object ExtQueries {
       val docToks = existing.select(col("source"),
           graft.ext.TextStats.pinnedCol(graft.ext.TextStats.tokens(
             coalesce(col("text"), lit("")))).as("__t"))
-        .localCheckpoint()
+        .transform(Checkpoint.materialize)
       val toks = docToks.select(col("source"), explode(col("__t")).as("tok"))
       graft.ext.Sketch.writeSketchStore(
         graft.ext.Sketch.hllSketch(toks, Seq("source"), col("tok")),
@@ -1857,7 +1857,6 @@ object ExtQueries {
     // normalized fingerprints must collapse, and the oracle recomputes
     // BOTH through DuckDB's independent nfc_normalize implementation.
     "q166_nfc_dedup" -> { (s, dir) =>
-      graft.funcs.TextFunctions.register(s)
       val d = docsPar(s, dir).select(col("doc_id"), col("text"))
       val twins = d.select((col("doc_id") * 2).as("doc_id"),
           concat(col("text"), lit(" caf\u00e9")).as("text"))
@@ -2032,8 +2031,8 @@ object ExtQueries {
           col("doc_id") % embK === col("vec_id"))
         .drop("vec_id")
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint()
-      // OPT r20: the fixture is already localCheckpointed two lines up —
+        .transform(Checkpoint.materialize)
+      // OPT r20: the fixture is already materialized two lines up —
       // materializeInput = false spares refinedWebFate's second full
       // corpus+embedding copy (its stage chain reads the fixture blocks)
       val fate = graft.ext.Crawl.refinedWebFate(fixture, "doc_id", "url",
@@ -2045,15 +2044,15 @@ object ExtQueries {
         .join(fate.filter(col("fate").isin("kept", "exact", "neardup",
             "semantic")).select(col("doc_id")), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("text2"), col("n_chars"), col("lang"))
-        .localCheckpoint()
+        .transform(Checkpoint.materialize)
       // stage 2 (dedup): quality-aware winners, NOT first-wins min-id
       val dd = Dedup.dedupCorpusKeepBest(quality, "doc_id", "text2",
-        "n_chars").localCheckpoint()
+        "n_chars").transform(Checkpoint.materialize)
       // stage 3 (mixture): alpha-sample by language. OPT r20: no barrier —
       // the mixture is a single-consumer codegen filter (its count
       // aggregate collected inside temperatureMixture already ran), and
       // packTokenArrays materializes its own ranged input two operators
-      // downstream, so the old localCheckpoint here was a pure extra pass.
+      // downstream, so the old lineage cut here was a pure extra pass.
       val mixed = Corpus.temperatureMixture(dd, "doc_id", "lang", alpha = 0.5)
       // stage 4 (tokenize) + stage 5 (pack)
       val wp = TextStats.wordPieceStats(mixed, "text2", q172Vocab)
@@ -2066,7 +2065,7 @@ object ExtQueries {
             concat_ws(":", x.getField("doc"), x.getField("off"),
               x.getField("len"))), " ").as("spans_str"))
         .repartition(1).sortWithinPartitions(col("chunk"))
-        .localCheckpoint()
+        .transform(Checkpoint.materialize)
       // stage 6 (shard): the q164 manifest discipline — single sorted
       // writer makes shard membership chunk DIV 8, replayable in SQL
       val path = Queries.scratchDir + "/q184_shards"
@@ -2310,7 +2309,7 @@ object ExtQueries {
           i => when(i % 11 === 0, lit(null).cast("string"))
             .when(i % 5 === 0, lit("x"))
             .otherwise(element_at(col("ref"), i))), x => x.isNotNull))
-        .localCheckpoint()
+        .transform(Checkpoint.materialize)
       Eval.rougeN(withCand, "doc_id", "cand", "ref", n = 2)
         .select(col("doc_id"), col("overlap"), col("c_grams"),
           col("r_grams"), col("rouge_p"), col("rouge_r"), col("rouge_f"))
@@ -2443,7 +2442,7 @@ object ExtQueries {
           i => when(i % 11 === 0, lit(null).cast("string"))
             .when(i % 5 === 0, lit("x"))
             .otherwise(element_at(col("ref"), i))), x => x.isNotNull))
-        .localCheckpoint()
+        .transform(Checkpoint.materialize)
       Eval.bleuScore(withCand, "doc_id", "cand", "ref")
         .select(col("doc_id"), col("c_len"), col("r_len"),
           col("m1"), col("m2"), col("m3"), col("m4"),
@@ -2751,7 +2750,6 @@ object ExtQueries {
     // strip_accents (utf8proc) — the fixture is ASCII, so the accents are
     // planted; ASCII text must pass through identical (fast-path law).
     "q167_accent_fold" -> { (s, dir) =>
-      graft.funcs.TextFunctions.register(s)
       val planted = concat(col("text"),
         lit(" crème brûlée déjà vu naïve " +
           "façade niño über açaí"))

@@ -8,9 +8,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.all("q10_pct_grand")(spark, "/root/testdata/sf0.001")
   /** One entry per implemented operator from SURVEY.md §2, plus the
-    * training-data-pipeline extensions (ExtQueries). */
+    * training-data-pipeline extensions (ExtQueries). The callers build
+    * their own sessions, with or without the extension, so each entry wires
+    * its session ([[GraftExtensions.register]]) before it runs. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ ExtQueries.all
+    (Queries.all ++ ExtQueries.all).map { case (name, q) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        GraftExtensions.register(spark)
+        q(spark, dir)
+      }
+    }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

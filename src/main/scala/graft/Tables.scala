@@ -17,7 +17,7 @@ object Tables {
     * yields the same total order as `orderBy` without the
     * RangePartitioner's extra boundary-sampling job (a whole separate Spark
     * job per query: measured ~0.15 s of the ~0.37 s total of a sub-second
-    * bench query, tools/SortCost.scala).
+    * bench query).
     *
     * Contract (precise, per ADVICE r15): presentBy covers any output that
     * is about to be SINGLE-FILE-COLLECTED anyway — the oracle harness

@@ -43,7 +43,6 @@ object Level {
   */
 final case class ColKey(physical: String, key: Seq[String]) {
   def leaf: String = key.last
-  def widen(outer: String): ColKey = ColKey(physical, outer +: key)
 }
 
 /** A label introduced by a margin-producing transform, with the transform kind

@@ -94,7 +94,6 @@ object Dedup {
   def incrementalExact(newDf: DataFrame, seenDf: DataFrame, idCol: String,
                        textCol: String, expectedSeen: Option[Long] = None,
                        fpp: Double = 0.01): DataFrame = {
-    graft.funcs.VectorFunctions.register(newDf.sparkSession)
     // the distinct fingerprint set feeds TWO consumers (the Bloom build's
     // eager job and the confirm semi-join), so it is materialized once —
     // otherwise every ingested batch would scan and re-fingerprint the full
@@ -151,7 +150,6 @@ object Dedup {
                                           textCol: String,
                                           materialize: DataFrame => DataFrame = identity): DataFrame = {
     require(filters.nonEmpty, "at least one filter required")
-    graft.funcs.VectorFunctions.register(newDf.sparkSession)
     val newKeys = materialize(newDf.select(
       col(idCol), TextStats.fingerprint(col(textCol)).as("__fp")))
     val confirmed = materialize(newKeys
@@ -247,7 +245,6 @@ object Dedup {
       textCol: String, k: Int, hasher: Hasher, maxDist: Int,
       materialize: DataFrame => DataFrame = identity): DataFrame = {
     require(filters.nonEmpty, "at least one filter required")
-    graft.funcs.VectorFunctions.register(newDf.sparkSession)
     // materialize: same lineage-cut dial as [[probeAndConfirmMulti]] — the
     // 4·k ORed probe arms each re-evaluate a lazy signature projection
     val newSig = materialize(simhash(newDf, idCol, textCol, k, hasher))
@@ -281,7 +278,6 @@ object Dedup {
     * [[simhash]] without an id column). */
   private[graft] def signatureKeys(df: DataFrame, textCol: String, k: Int,
                                    hasher: Hasher): DataFrame = {
-    graft.funcs.VectorFunctions.register(df.sparkSession)
     df.select(TextStats.tokens(coalesce(col(textCol), lit(""))).as("__t"))
       .select(shinglesOfTokens(col("__t"), k).as("__g"))
       .select(graft.funcs.VectorFunctions.simhashSig(col("__g"),
@@ -314,7 +310,6 @@ object Dedup {
   private[graft] def nearSeenIds(newSig: DataFrame, seenSig: DataFrame,
                                  maxDist: Int, expectedSeen: Option[Long],
                                  fpp: Double): DataFrame = {
-    graft.funcs.VectorFunctions.register(newSig.sparkSession)
     def blocks(sig: Column) = array((0 until 4).map(blockKey(sig, _)): _*)
     // capacity: caller's expected seen count × 4 blocks, or the measured
     // block-row count (4 × |seen|, an upper bound on distinct keys — no
@@ -925,7 +920,6 @@ object Dedup {
   private[graft] def dropSeenTypos(newDf: DataFrame, idCol: String,
                                    strCol: String, cat: TypoCatalog,
                                    materialize: DataFrame => DataFrame): DataFrame = {
-    graft.funcs.VectorFunctions.register(newDf.sparkSession)
     val newVars = materialize(deleteVariantPostings(newDf, idCol, strCol, cat.maxDist))
     val confirmed = materialize(newVars
       .filter(graft.funcs.VectorFunctions.bloomMightContain(
@@ -962,7 +956,6 @@ object Dedup {
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numPerm: Int = 128, k: Int = 4,
                         seed: Long = 42L): DataFrame = {
-    graft.funcs.VectorFunctions.register(df.sparkSession)
     val (as, bs) = perms(numPerm, seed).unzip
     // Each projection materializes the non-cheap array the next one folds
     // over, so CollapseProject cannot duplicate the regex/shingle work;
@@ -1366,7 +1359,6 @@ object Dedup {
     * aggregation). Assumes `idCol` identifies a document uniquely. */
   def simhash(df: DataFrame, idCol: String, textCol: String, k: Int = 4,
               hasher: Hasher = Hasher.Xx): DataFrame = {
-    graft.funcs.VectorFunctions.register(df.sparkSession)
     // coalesce keeps the chain non-nullable — see minhashSignatures for why
     // (inferred isnotnull(sig) would re-inline the tree below the block join)
     df.select(col(idCol).as("id"),
@@ -1418,7 +1410,6 @@ object Dedup {
                          expectedSeen: Option[Long] = None, fpp: Double = 0.01): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
       s"pigeonhole blocking assumes maxDist <= 3 (4 blocks), got $maxDist")
-    graft.funcs.VectorFunctions.register(newSigs.sparkSession)
     // both sides materialized (the incrementalNear no-CSE/probe lessons)
     val seen = Checkpoint.materialize(seenSigs.select(col("sig").as("__sig")).distinct())
     val nw = Checkpoint.materialize(newSigs.select(col("id"), col("sig").as("simhash")))

@@ -50,7 +50,6 @@ object Quantize {
     * `qcos_sim` is deterministic. */
   def annTopKQuantized(corpus: DataFrame, queries: DataFrame, idCol: String,
                        vecCol: String, topK: Int): DataFrame = {
-    graft.funcs.VectorFunctions.register(corpus.sparkSession)
     def preparedQ(df: DataFrame) =
       quantize(df, idCol, vecCol)
         .withColumn("qf", transform(col("q"), _.cast("float")))
@@ -328,7 +327,6 @@ object Quantize {
     * Returns (id, codes: array<int>). */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame): DataFrame = {
-    graft.funcs.VectorFunctions.register(corpus.sparkSession)
     val cb = collectCodebooks(codebooks)
     corpus.select(col(idCol).as("id"),
       graft.funcs.VectorFunctions.pqEncodeCodes(vecExpr(corpus, vecCol), cb)
@@ -470,7 +468,6 @@ object Quantize {
           .sortBy(r => r.get(0) match { case n: java.lang.Number => n.longValue })
       else Array.empty[org.apache.spark.sql.Row]
     if (rows.nonEmpty) {
-      graft.funcs.VectorFunctions.register(df.sparkSession)
       val pvs = rows.map(_.getSeq[Double](1).toArray)
       val pidArr = array(rows.map(r => lit(r.get(0))): _*)
       val pvArr = array(pvs.map(a => lit(a)): _*)
@@ -556,7 +553,6 @@ object Quantize {
     * exact input the old id-joined encode read. */
   private def encodeAssigned(cAssigned: DataFrame, cbs: DataFrame,
                              residual: Boolean): DataFrame = {
-    graft.funcs.VectorFunctions.register(cAssigned.sparkSession)
     val cb = collectCodebooks(cbs)
     val src =
       if (residual) residualOf(cAssigned, "rv")
@@ -574,7 +570,6 @@ object Quantize {
                              idCol: String, vecCol: String, piv: DataFrame,
                              cbs: DataFrame, topK: Int, nProbe: Int,
                              residual: Boolean): DataFrame = {
-    graft.funcs.VectorFunctions.register(queries.sparkSession)
     val probes0 = nearestCellsPq(
       queries.select(col(idCol).as("id"), Similarity.toDouble(col(vecCol)).as("v")),
       piv, nProbe)
@@ -760,7 +755,6 @@ object Quantize {
                  train: DataFrame = null): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(rerank >= 0, s"rerank must be >= 0, got $rerank")
-    graft.funcs.VectorFunctions.register(corpus.sparkSession)
     val t = if (train == null) corpus else train
     // thresholds fit once (bounded collect: dims rows) and freeze for BOTH
     // sides — corpus and queries must share the bit geometry

@@ -57,7 +57,6 @@ object Reduce {
              rerank: Int = 4): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(rerank >= 0, s"rerank must be >= 0, got $rerank")
-    graft.funcs.VectorFunctions.register(corpus.sparkSession)
     val cP = jlProject(corpus, idCol, vecCol, outDim)
     val qP = jlProject(queries, idCol, vecCol, outDim)
       .select(col("id").as("qid"), col("y").as("qy"))

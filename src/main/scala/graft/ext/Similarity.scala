@@ -40,7 +40,6 @@ object Similarity {
     * Norm and all dot products go through the codegen'd DotProductFloat
     * expression — bit-identical to the double-cast fold, ~20x faster. */
   def prepared(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.funcs.VectorFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("nrm", sqrt(graft.funcs.VectorFunctions.dotF(col("v"), col("v"))))
   }
@@ -118,8 +117,7 @@ object Similarity {
 
   /** `bits`-bit random-hyperplane signature of a vector: bit p = sign of the
     * integer projection onto pseudo-random plane p. Delegates to the fused
-    * codegen'd [[graft.funcs.LshSignatureFloat]] expression (requires
-    * `VectorFunctions.register`, done by [[prepared]]); ExtSpec keeps a
+    * codegen'd [[graft.funcs.LshSignatureFloat]] expression; ExtSpec keeps a
     * declarative higher-order-function formulation as its executable
     * specification and asserts the two agree bit for bit. */
   def lshSignature(v: Column, bits: Int = 16): Column =
@@ -504,7 +502,6 @@ object Similarity {
   def annIvfTopKIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
                         queries: DataFrame, idCol: String, vecCol: String,
                         topK: Int, nProbe: Int = 4): DataFrame = {
-    graft.funcs.VectorFunctions.register(spark)
     val assigned = spark.table(s"${name}_vectors")
     val pv = spark.table(s"${name}_centroids")
     probeAndRank(assigned, prepared(queries, idCol, vecCol), pv, topK, nProbe)
@@ -770,7 +767,6 @@ object Similarity {
     * switch to splitmix64 exactly like [[cosineLshPairs]]. */
   private[graft] def vectorBandKeys(df: DataFrame, vecCol: String,
                                     bits: Int, bands: Int): DataFrame = {
-    graft.funcs.VectorFunctions.register(df.sparkSession)
     val p = df.select(col(vecCol).as("v")).filter(col("v").isNotNull)
       .withColumn("nrm",
         sqrt(graft.funcs.VectorFunctions.dotF(col("v"), col("v"))))
@@ -824,7 +820,6 @@ object Similarity {
       seenKeys: DataFrame, filters: Seq[Array[Byte]], idCol: String,
       vecCol: String, minCos: Double, bits: Int, bands: Int): DataFrame = {
     require(filters.nonEmpty, "at least one filter required")
-    graft.funcs.VectorFunctions.register(newDf.sparkSession)
     val p = prepared(newDf, idCol, vecCol).filter(col("v").isNotNull)
     val banded = bandedRows(p, Seq("id", "v", "nrm"), "v", bits, bands,
         mix = bits > 64, Nil)
@@ -912,7 +907,6 @@ object Similarity {
   def semanticPairsIndexed(spark: org.apache.spark.sql.SparkSession,
                            name: String, minCos: Double,
                            blocks: Int = 4): DataFrame = {
-    graft.funcs.VectorFunctions.register(spark)
     pairsWithinCells(spark.table(s"${name}_vectors"), minCos, blocks)
   }
 

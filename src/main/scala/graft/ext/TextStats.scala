@@ -246,7 +246,6 @@ object TextStats {
     * `h = (h·131 + c) mod 2^31−1`), no per-character array materialization,
     * and the identical fold runs in ANSI SQL for the DuckDB oracle (q30). */
   def rollingHash(text: Column): Column = {
-    graft.funcs.VectorFunctions.register(org.apache.spark.sql.SparkSession.active)
     val norm = regexp_replace(lower(trim(text)), "\\s+", " ")
     graft.funcs.VectorFunctions.rollingHash(norm)
   }
@@ -270,7 +269,6 @@ object TextStats {
   def bpeStats(df: DataFrame, textCol: String,
                merges: Seq[String], vocab: Seq[String] = Nil,
                byteLevel: Boolean = false): DataFrame = {
-    graft.funcs.BpeFunctions.register(df.sparkSession)
     val t = coalesce(col(textCol), lit(""))
     val base = df
       .withColumn("bpe_tokens",
@@ -297,7 +295,6 @@ object TextStats {
   def wordPieceStats(df: DataFrame, textCol: String, vocab: Seq[String],
                      unk: String = "[UNK]", maxWordLen: Int = 100,
                      lower: Boolean = true): DataFrame = {
-    graft.funcs.WordPieceFunctions.register(df.sparkSession)
     val t = coalesce(col(textCol), lit(""))
     df.withColumn("wp_tokens",
         graft.funcs.WordPieceFunctions.wordPieceEncode(t, vocab, unk,

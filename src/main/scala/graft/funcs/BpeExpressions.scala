@@ -382,69 +382,19 @@ case class BpeDecodeTokens(child: Expression, codec: BpeCodec)
     copy(child = newChild)
 }
 
+/** Column API of the BPE expressions. Each call resolves its `graft_*`
+  * name through the session's function registry, which
+  * [[graft.GraftExtensions]] wires. */
 object BpeFunctions {
 
-  private val EncodeName = "graft_bpe_encode"
-  private val IdsName = "graft_bpe_ids"
-  private val DecodeName = "graft_bpe_decode"
-  private val DetokName = "graft_bpe_detok"
-
-  private def stringArrayLit(e: Expression, what: String): Array[String] =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(d: ArrayData, ArrayType(StringType, _)) =>
-        d.toArray[UTF8String](StringType).map(_.toString)
-      case other =>
-        throw new IllegalArgumentException(
-          s"$what must be an array<string> literal, got $other")
-    }
-
-  private def boolLit(e: Expression, what: String): Boolean = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean, BooleanType) => b
-    case other => throw new IllegalArgumentException(
-      s"$what must be a boolean literal, got $other")
-  }
-
-  /** (name, builder) pairs — shared by [[register]] and the
-    * session-extensions route ([[graft.GraftExtensions]]). The optional
-    * trailing boolean literal selects the byte-level GPT-2 discipline. */
-  private[funcs] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    EncodeName -> ((exprs: Seq[Expression]) => BpeEncode(exprs.head,
-      new BpeCodec(stringArrayLit(exprs(1), "merges"), Array.empty,
-        exprs.length > 2 && boolLit(exprs(2), "byteLevel")))),
-    IdsName -> ((exprs: Seq[Expression]) => BpeEncodeIds(exprs.head,
-      new BpeCodec(stringArrayLit(exprs(1), "merges"),
-        stringArrayLit(exprs(2), "vocab"),
-        exprs.length > 3 && boolLit(exprs(3), "byteLevel")))),
-    DecodeName -> ((exprs: Seq[Expression]) => BpeDecodeIds(exprs.head,
-      new BpeCodec(Array.empty, stringArrayLit(exprs(1), "vocab"),
-        exprs.length > 2 && boolLit(exprs(2), "byteLevel")))),
-    DetokName -> ((exprs: Seq[Expression]) => BpeDecodeTokens(exprs.head,
-      new BpeCodec(Array.empty, Array.empty,
-        exprs.length > 1 && boolLit(exprs(1), "byteLevel")))))
-
-  /** Register the BPE expressions (idempotent); merges/vocab arrive as
-    * array<string> LITERALS and are folded into the expression's codec at
-    * resolution, so executors get one deserialized table per task binary —
-    * never a per-row argument. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "built-in")
-    }
-  }
-
-  /** Session-extensions injection (see `VectorFunctions.injectInto`). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (n, b) =>
-      ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(n),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.funcs.BpeFunctions", n), b))
-    }
+  private[graft] val EncodeName = "graft_bpe_encode"
+  private[graft] val IdsName = "graft_bpe_ids"
+  private[graft] val DecodeName = "graft_bpe_decode"
+  private[graft] val DetokName = "graft_bpe_detok"
 
   /** Column API: BPE tokens under `merges` (GPT-2 `"left right"` lines,
-    * rank order). Requires [[register]] on the active session.
-    * `byteLevel = true` runs the production GPT-2 byte-level discipline
-    * (see [[BpeCodec]]) — pair with tables from [[BpeFiles]]. */
+    * rank order). `byteLevel = true` runs the production GPT-2 byte-level
+    * discipline (see [[BpeCodec]]) — pair with tables from [[BpeFiles]]. */
   def bpeEncode(text: Column, merges: Seq[String],
                 byteLevel: Boolean = false): Column =
     org.apache.spark.sql.functions.call_function(EncodeName, text,

@@ -54,46 +54,15 @@ case class UnicodeNormalize(child: Expression,
     copy(child = newChild)
 }
 
+/** Column API of the text expressions. Each call resolves its `graft_*`
+  * name through the session's function registry, which
+  * [[graft.GraftExtensions]] wires. */
 object TextFunctions {
 
-  private val NormName = "graft_unicode_normalize"
-
-  private def formLit(e: Expression): java.text.Normalizer.Form = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, StringType) =>
-      try java.text.Normalizer.Form.valueOf(s.toString.toUpperCase)
-      catch {
-        case _: IllegalArgumentException => throw new IllegalArgumentException(
-          s"form must be one of NFC|NFD|NFKC|NFKD, got '$s'")
-      }
-    case other => throw new IllegalArgumentException(
-      s"form must be a string literal, got $other")
-  }
-
-  /** (name, builder) — shared by [[register]] and the session-extensions
-    * route ([[graft.GraftExtensions]]), like every other graft family. */
-  private[funcs] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    NormName -> ((exprs: Seq[Expression]) =>
-      UnicodeNormalize(exprs.head, formLit(exprs(1)))))
-
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "built-in")
-    }
-  }
-
-  /** Session-extensions injection (see `VectorFunctions.injectInto`). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (n, b) =>
-      ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(n),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.funcs.TextFunctions", n), b))
-    }
+  private[graft] val NormName = "graft_unicode_normalize"
 
   /** Column API: Unicode-normalize a string column (`form` one of
-    * NFC|NFD|NFKC|NFKD; default NFC — the canonical ingestion form).
-    * Requires [[register]] on the active session. */
+    * NFC|NFD|NFKC|NFKD; default NFC — the canonical ingestion form). */
   def unicodeNormalize(text: Column, form: String = "NFC"): Column =
     org.apache.spark.sql.functions.call_function(NormName, text,
       org.apache.spark.sql.functions.lit(form))

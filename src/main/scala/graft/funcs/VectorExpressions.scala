@@ -547,7 +547,11 @@ private[funcs] object VecInput {
   * arrays PER ROW (HOFs are CodegenFallback — the [[DotProductFloat]]
   * lesson); this is one tight primitive loop. Bit-identical: subspace
   * distances accumulate in dimension order and round through [[Round6]]
-  * (Spark's own round(_, 6) double path).
+  * (Spark's own round(_, 6) double path). Distances order as Spark orders
+  * doubles, like [[NearestPivotIdx]]: NaN sorts above every number, so a
+  * NaN or overflowing subvector never yields code -1; an all-NaN or
+  * all-infinite subspace keeps code 0, and [[AdcLookupSum]] can index
+  * every code.
   *
   * `cb(sub)(code) = centroid` — sub- and code-ordered, the packed-codebook
   * layout. Input element type float or double (decided at bind time).
@@ -610,7 +614,7 @@ case class PqEncodeCodes(child: Expression, cb: Array[Array[Array[Double]]])
           j += 1
         }
         val rd = Round6.round6(d)
-        if (rd < best) { best = rd; bc = ci }
+        if (bc < 0 || rd < best || (best.isNaN && !rd.isNaN)) { best = rd; bc = ci }
         ci += 1
       }
       codes(s) = bc
@@ -770,132 +774,31 @@ case class NearestPivotIdx(child: Expression, pvs: Array[Array[Double]])
     copy(child = newChild)
 }
 
+/** Column API of the vector expressions. Each call resolves its `graft_*`
+  * name through the session's function registry, which
+  * [[graft.GraftExtensions]] wires. */
 object VectorFunctions {
 
-  private val Name = "graft_dot_f"
-  private val SigName = "graft_lsh_sig"
-  private val MinHashName = "graft_minhash_sig"
-  private val SimHashName = "graft_simhash_sig"
-  private val RollName = "graft_rolling_hash"
-  private val BloomName = "graft_bloom_might_contain"
-  private val PqEncodeName = "graft_pq_encode"
-  private val AdcSumName = "graft_adc_sum"
-  private val NearestPivotName = "graft_nearest_pivot"
+  private[graft] val DotName = "graft_dot_f"
+  private[graft] val SigName = "graft_lsh_sig"
+  private[graft] val MinHashName = "graft_minhash_sig"
+  private[graft] val SimHashName = "graft_simhash_sig"
+  private[graft] val RollName = "graft_rolling_hash"
+  private[graft] val BloomName = "graft_bloom_might_contain"
+  private[graft] val PqEncodeName = "graft_pq_encode"
+  private[graft] val AdcSumName = "graft_adc_sum"
+  private[graft] val NearestPivotName = "graft_nearest_pivot"
 
-  /** (name, builder) for every graft vector expression — ONE builder list
-    * shared by the per-session [[register]] and the session-extensions
-    * route ([[graft.GraftExtensions]] / [[injectInto]]), so the two ways
-    * of wiring the functions can never drift. */
-  /** array<array<double>> literal → Array[Array[Double]] (for the packed
-    * pivot/codebook payloads of the PQ expressions). */
-  private def doubleMatrixLit(e: Expression): Array[Array[Double]] = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(d: ArrayData,
-        ArrayType(ArrayType(DoubleType, _), _)) =>
-      Array.tabulate(d.numElements())(i => d.getArray(i).toDoubleArray())
-    case other =>
-      throw new IllegalArgumentException(
-        s"expected an array<array<double>> literal, got $other")
-  }
-
-  /** array<array<array<double>>> literal → Array[Array[Array[Double]]]. */
-  private def tripleDoubleLit(e: Expression): Array[Array[Array[Double]]] = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(d: ArrayData,
-        ArrayType(ArrayType(ArrayType(DoubleType, _), _), _)) =>
-      Array.tabulate(d.numElements()) { i =>
-        val inner = d.getArray(i)
-        Array.tabulate(inner.numElements())(j => inner.getArray(j).toDoubleArray())
-      }
-    case other =>
-      throw new IllegalArgumentException(
-        s"expected an array<array<array<double>>> literal, got $other")
-  }
-
-  private[funcs] def builders: Seq[(String, Seq[Expression] => Expression)] = {
-    def longArrayLit(e: Expression): Seq[Long] = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(d: ArrayData, ArrayType(LongType, _)) =>
-        d.toLongArray().toSeq
-      case other =>
-        throw new IllegalArgumentException(s"expected an array<long> literal, got $other")
-    }
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(i: Int, _) => i
-      case other =>
-        throw new IllegalArgumentException(s"$what must be an int literal, got $other")
-    }
-    def boolLit(e: Expression, what: String): Boolean = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean, _) => b
-      case other =>
-        throw new IllegalArgumentException(s"$what must be a boolean literal, got $other")
-    }
-    Seq(
-      Name -> ((exprs: Seq[Expression]) => DotProductFloat(exprs.head, exprs(1))),
-      SigName -> ((exprs: Seq[Expression]) => {
-        val off = if (exprs.size > 2) intLit(exprs(2), "offset") else 0
-        val mix = if (exprs.size > 3) boolLit(exprs(3), "mix") else false
-        val thr = if (exprs.size > 4) longArrayLit(exprs(4)) else Nil
-        LshSignatureFloat(exprs.head, intLit(exprs(1), "bits"), off, mix, thr)
-      }),
-      MinHashName -> ((exprs: Seq[Expression]) =>
-        MinHashSignature(exprs.head, longArrayLit(exprs(1)), longArrayLit(exprs(2)))),
-      SimHashName -> ((exprs: Seq[Expression]) => exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean, _) =>
-          SimHashSignature(exprs.head, b)
-        case other =>
-          throw new IllegalArgumentException(s"useMd5 must be a boolean literal, got $other")
-      }),
-      RollName -> ((exprs: Seq[Expression]) => RollingHash(exprs.head)),
-      PqEncodeName -> ((exprs: Seq[Expression]) =>
-        PqEncodeCodes(exprs.head, tripleDoubleLit(exprs(1)))),
-      AdcSumName -> ((exprs: Seq[Expression]) =>
-        AdcLookupSum(exprs.head, exprs(1))),
-      NearestPivotName -> ((exprs: Seq[Expression]) =>
-        NearestPivotIdx(exprs.head, doubleMatrixLit(exprs(1)))),
-      BloomName -> ((exprs: Seq[Expression]) => {
-        if (exprs.size != 2)
-          throw new IllegalArgumentException(
-            s"$BloomName takes (probe: bigint, filter: binary literal), " +
-              s"got ${exprs.size} arguments")
-        exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(b: Array[Byte], BinaryType) =>
-            BloomMightContain(exprs.head, b)
-          case other =>
-            throw new IllegalArgumentException(
-              s"filter must be a binary literal, got $other")
-        }
-      }))
-  }
-
-  /** Register the expressions in the session's function registry (idempotent);
-    * the registry + `call_function` is the public route from Column to a
-    * custom Catalyst expression. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "built-in")
-    }
-  }
-
-  /** Session-extensions injection — the `spark.sql.extensions` deployment
-    * route ([[graft.GraftExtensions]]): the same builders land in every
-    * session's registry at session-build time, no register() call. */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (n, b) =>
-      ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(n),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.funcs.VectorFunctions", n), b))
-    }
-
-  /** Column API for the codegen'd float-array dot product; requires
-    * [[register]] on the active session (Similarity does this on entry). */
+  /** Column API for the codegen'd float-array dot product. */
   def dotF(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, a, b)
+    org.apache.spark.sql.functions.call_function(DotName, a, b)
 
   /** Column API for the codegen'd LSH signature; `offset` shifts the plane
     * index range to [offset, offset+bits) so signatures wider than 64 bits
     * compose from multiple words. `mix` selects the splitmix64 plane family
     * (required for wide signatures — see [[LshPlanes]]); `thresholds`
     * (length = bits) replaces the ≥0 sign test with per-plane constants,
-    * implementing mean-centering. Requires [[register]]. */
+    * implementing mean-centering. */
   def lshSig(v: Column, bits: Int, offset: Int = 0, mix: Boolean = false,
              thresholds: Seq[Long] = Nil): Column =
     org.apache.spark.sql.functions.call_function(SigName, v,
@@ -906,32 +809,30 @@ object VectorFunctions {
         if (thresholds.isEmpty) Array.empty[Long] else thresholds.toArray))
 
   /** Column API for the codegen'd per-document MinHash signature over an
-    * `array<string>` of distinct shingles; requires [[register]]. */
+    * `array<string>` of distinct shingles. */
   def minhashSig(shingles: Column, a: Array[Long], b: Array[Long]): Column =
     org.apache.spark.sql.functions.call_function(MinHashName, shingles,
       org.apache.spark.sql.functions.lit(a), org.apache.spark.sql.functions.lit(b))
 
   /** Column API for the codegen'd per-document SimHash signature over an
-    * `array<string>` of distinct shingles; requires [[register]]. */
+    * `array<string>` of distinct shingles. */
   def simhashSig(shingles: Column, useMd5: Boolean): Column =
     org.apache.spark.sql.functions.call_function(SimHashName, shingles,
       org.apache.spark.sql.functions.lit(useMd5))
 
-  /** Column API for the codegen'd rolling polynomial hash; requires
-    * [[register]]. */
+  /** Column API for the codegen'd rolling polynomial hash. */
   def rollingHash(s: Column): Column =
     org.apache.spark.sql.functions.call_function(RollName, s)
 
   /** Column API for the codegen'd Bloom-filter probe over an xxhash64
-    * column; `filter` is a serialized `util.sketch.BloomFilter`. Requires
-    * [[register]]. */
+    * column; `filter` is a serialized `util.sketch.BloomFilter`. */
   def bloomMightContain(h: Column, filter: Array[Byte]): Column =
     org.apache.spark.sql.functions.call_function(BloomName, h,
       org.apache.spark.sql.functions.lit(filter))
 
   /** Column API for the codegen'd PQ encode; `cb(sub)(code) = centroid`
     * (sub- and code-ordered). Null for a vector of the wrong length or with
-    * a null element. Requires [[register]]. */
+    * a null element. */
   def pqEncodeCodes(v: Column, cb: Array[Array[Array[Double]]]): Column =
     org.apache.spark.sql.functions.call_function(PqEncodeName, v,
       org.apache.spark.sql.functions.typedlit(

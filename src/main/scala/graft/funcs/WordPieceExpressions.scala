@@ -228,75 +228,16 @@ object WordPieceFiles {
     parseVocabTxt(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
 }
 
+/** Column API of the WordPiece expressions. Each call resolves its
+  * `graft_*` name through the session's function registry, which
+  * [[graft.GraftExtensions]] wires. */
 object WordPieceFunctions {
 
-  private val EncodeName = "graft_wordpiece_encode"
-  private val IdsName = "graft_wordpiece_ids"
-  private val DecodeName = "graft_wordpiece_decode"
+  private[graft] val EncodeName = "graft_wordpiece_encode"
+  private[graft] val IdsName = "graft_wordpiece_ids"
+  private[graft] val DecodeName = "graft_wordpiece_decode"
 
-  private def stringArrayLit(e: Expression, what: String): Array[String] =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(d: ArrayData, ArrayType(StringType, _)) =>
-        d.toArray[UTF8String](StringType).map(_.toString)
-      case other =>
-        throw new IllegalArgumentException(
-          s"$what must be an array<string> literal, got $other")
-    }
-
-  private def stringLit(e: Expression, what: String): String = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, StringType) =>
-      s.toString
-    case other => throw new IllegalArgumentException(
-      s"$what must be a string literal, got $other")
-  }
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(i: Int, IntegerType) => i
-    case other => throw new IllegalArgumentException(
-      s"$what must be an int literal, got $other")
-  }
-
-  private def boolLit(e: Expression, what: String): Boolean = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean, BooleanType) => b
-    case other => throw new IllegalArgumentException(
-      s"$what must be a boolean literal, got $other")
-  }
-
-  private def codecOf(exprs: Seq[Expression]): WordPieceCodec =
-    new WordPieceCodec(stringArrayLit(exprs(1), "vocab"),
-      stringLit(exprs(2), "unk"), intLit(exprs(3), "maxChars"),
-      boolLit(exprs(4), "lower"))
-
-  /** (name, builder) pairs — shared by [[register]] and the
-    * session-extensions route ([[graft.GraftExtensions]]). */
-  private[funcs] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    EncodeName -> ((exprs: Seq[Expression]) =>
-      WordPieceEncode(exprs.head, codecOf(exprs))),
-    IdsName -> ((exprs: Seq[Expression]) =>
-      WordPieceEncodeIds(exprs.head, codecOf(exprs))),
-    DecodeName -> ((exprs: Seq[Expression]) =>
-      WordPieceDecodeIds(exprs.head, codecOf(exprs))))
-
-  /** Register the WordPiece expressions (idempotent); the vocabulary
-    * arrives as an array<string> LITERAL and is folded into the codec at
-    * resolution — one deserialized table per task binary, never a per-row
-    * argument. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "built-in")
-    }
-  }
-
-  /** Session-extensions injection (see `VectorFunctions.injectInto`). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (n, b) =>
-      ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(n),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.funcs.WordPieceFunctions", n), b))
-    }
-
-  /** Column API: WordPiece tokens. Requires [[register]] on the session. */
+  /** Column API: WordPiece tokens. */
   def wordPieceEncode(text: Column, vocab: Seq[String],
                       unk: String = "[UNK]", maxChars: Int = 100,
                       lower: Boolean = true): Column =

@@ -693,7 +693,6 @@ object Streaming {
   def dedupNear(events: DataFrame, textCol: String, tsCol: String,
                 watermark: String, k: Int = 4,
                 hasher: graft.ext.Dedup.Hasher = graft.ext.Dedup.Hasher.Xx): DataFrame = {
-    graft.funcs.VectorFunctions.register(events.sparkSession)
     events
       .withColumn("__fb_t",
         graft.ext.TextStats.tokens(coalesce(col(textCol), lit(""))))

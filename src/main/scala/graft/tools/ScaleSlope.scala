@@ -73,6 +73,8 @@ object ScaleSlope {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the sweep calls ext/ operators directly, not through SparkEntry
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -410,7 +410,6 @@ class ExtSpec extends AnyFunSuite {
 
   test("codegen'd LSH signature equals its declarative specification") {
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
-    graft.funcs.VectorFunctions.register(spark)
     for (bits <- Seq(16, 48, 64)) {
       val mismatches = e.select(
           Similarity.lshSignature(col("embedding"), bits).as("fast"),
@@ -2642,7 +2641,6 @@ class ExtSpec extends AnyFunSuite {
     assert(r2(0L) == Seq("[UNK]"))
     assert(r2(1L).head == "a" && r2(1L).size == 100)
     // decode: word-initial pieces space-join, continuations fuse
-    graft.funcs.WordPieceFunctions.register(spark)
     val back = Seq((0L, "the theme unaffable")).toDF("doc_id", "text")
       .select(WordPieceFunctions.wordPieceDecode(
         WordPieceFunctions.wordPieceIds(col("text"), vocab), vocab).as("t"))
@@ -2757,7 +2755,6 @@ class ExtSpec extends AnyFunSuite {
     assert(v == Seq("[PAD]", "[UNK]", "the", "", "##e", "th"))
     assert(v.indexOf("##e") == 4, "interior empty line must hold its id slot")
     // the loaded table runs through the tokenizer with its own [UNK]
-    WordPieceFunctions.register(spark)
     val ids = Seq((0L, "the zap")).toDF("doc_id", "text")
       .select(WordPieceFunctions.wordPieceIds(col("text"), v,
         unk = "[UNK]").as("ids"))
@@ -3143,17 +3140,22 @@ class ExtSpec extends AnyFunSuite {
 
   test("PQ encode and nearest pivot return null for a short, long or null-holding vector") {
     import graft.funcs.VectorFunctions
-    VectorFunctions.register(spark)
     val cb = Array(Array(Array(0.0), Array(2.0)), Array(Array(0.0), Array(2.0)))
     val pvs = Array(Array(0.0, 0.0), Array(3.0, 3.0))
+    val qtab = typedlit(Seq(Seq(1.0, 2.0), Seq(10.0, 20.0)))
     // repartition keeps the projection out of ConvertToLocalRelation, so it
     // runs through the physical plan: whole-stage codegen (doGenCode), then
-    // interpreted projections (eval)
+    // interpreted projections (eval). A NaN component and one whose squared
+    // distance overflows to +Infinity order as Spark orders doubles (NaN
+    // above every number; an all-NaN or all-infinite subspace keeps code 0),
+    // so every code indexes the ADC table.
     val vecs = Seq(
       (0L, Seq(Some(1.5), Some(0.1))),
       (1L, Seq(Some(1.5))),
       (2L, Seq(Some(1.5), Some(0.1), Some(9.0))),
-      (3L, Seq(Some(1.5), None))).toDF("id", "v").repartition(1)
+      (3L, Seq(Some(1.5), None)),
+      (4L, Seq(Some(Double.NaN), Some(1.9))),
+      (5L, Seq(Some(1.9), Some(1e300)))).toDF("id", "v").repartition(1)
     for ((wholeStage, mode) <- Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN")) {
       spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
@@ -3161,11 +3163,14 @@ class ExtSpec extends AnyFunSuite {
         val got = vecs.select(col("id"),
             VectorFunctions.pqEncodeCodes(col("v"), cb).as("codes"),
             VectorFunctions.nearestPivot(col("v"), pvs).as("cell"))
+          .withColumn("adc", VectorFunctions.adcSum(qtab, col("codes")))
           .collect().map(r => r.getLong(0) ->
-            (Option(r.getSeq[Int](1)), Option(r.get(2)))).toMap
-        assert(got(0L) == (Some(Seq(1, 0)), Some(0)), s"$mode: $got")
+            (Option(r.getSeq[Int](1)), Option(r.get(2)), Option(r.get(3)))).toMap
+        assert(got(0L) == ((Some(Seq(1, 0)), Some(0), Some(12.0))), s"$mode: $got")
         for (id <- Seq(1L, 2L, 3L))
-          assert(got(id) == (None, None), s"$mode: vec $id gave ${got(id)}")
+          assert(got(id) == ((None, None, None)), s"$mode: vec $id gave ${got(id)}")
+        assert(got(4L) == ((Some(Seq(0, 1)), Some(0), Some(21.0))), s"$mode: $got")
+        assert(got(5L) == ((Some(Seq(1, 0)), Some(0), Some(12.0))), s"$mode: $got")
       } finally {
         spark.conf.unset("spark.sql.codegen.wholeStage")
         spark.conf.unset("spark.sql.codegen.factoryMode")
@@ -5692,7 +5697,6 @@ class ExtSpec extends AnyFunSuite {
 
   test("bpeDetok: byte-level encode-decode is exact on every input shape") {
     import graft.funcs.{BpeFunctions, BpeCodec}
-    BpeFunctions.register(spark)
     val merges = Seq("Ġ t", "h e", "Ġt he")
     val texts = Seq(
       "The résumé, it's here   and\nthe end",
@@ -5875,7 +5879,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("unicodeNormalize: forms, ligature folding, null, codegen survives") {
-    graft.funcs.TextFunctions.register(spark)
     import graft.funcs.TextFunctions.unicodeNormalize
     val df = Seq((0L, "café"), (1L, "café"), (2L, "ﬁsh"),
         (3L, null.asInstanceOf[String])).toDF("id", "t")
@@ -6087,7 +6090,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("stripAccents: folds base+mark compositions, keeps non-decomposables") {
-    graft.funcs.TextFunctions.register(spark)
     import graft.funcs.TextFunctions.stripAccents
     val df = Seq("crème brûlée", "ascii text",
         "ø đ ł", null.asInstanceOf[String]).toDF("t")

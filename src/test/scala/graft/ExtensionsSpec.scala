@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ext.{Dedup, Similarity, TextStats}
 
 /** GraftExtensions — the `spark.sql.extensions` deployment route. The
   * shared test session is built WITH the extension (TestSpark), so these
@@ -39,6 +45,51 @@ class ExtensionsSpec extends AnyFunSuite {
         lit("abc"), Seq("[UNK]", "ab", "##c")).as("t"))
       .head().getSeq[String](0)
     assert(wp == Seq("ab", "##c"))
+  }
+
+  /** Name -> registry entry (info, builder) of every graft function in `s`.
+    * A re-registration shows in the info instance even where it reuses the
+    * builder: a Scala lambda that captures nothing is one JVM instance. */
+  private def graftEntries(s: SparkSession): Map[String, (ExpressionInfo, FunctionBuilder)] = {
+    val reg = s.sessionState.functionRegistry
+    reg.listFunction().filter(_.funcName.startsWith("graft_")).map(id =>
+      id.funcName -> ((reg.lookupFunction(id).get, reg.lookupFunctionBuilder(id).get))).toMap
+  }
+
+  private def assertSameEntries(before: Map[String, (ExpressionInfo, FunctionBuilder)],
+                                after: Map[String, (ExpressionInfo, FunctionBuilder)]): Unit = {
+    assert(after.keySet == before.keySet)
+    before.foreach { case (n, (info, b)) =>
+      assert((after(n)._1 eq info) && (after(n)._2 eq b), s"$n was re-registered")
+    }
+  }
+
+  test("operators and register leave the injected builders in place") {
+    val before = graftEntries(spark)
+    assert(before.size == 17, before.keys.toSeq.sorted)
+    val docs = Seq((0L, "the cat sat on the mat"), (1L, "a dog")).toDF("doc_id", "text")
+    assert(Dedup.minhashSignatures(docs, "doc_id", "text").count() == 2)
+    TextStats.bpeStats(docs, "text", Seq("t h"))
+    TextStats.wordPieceStats(docs, "text", Seq("[UNK]", "the"))
+    assert(Similarity.prepared(Seq((0L, Array(3f, 4f))).toDF("id", "v"), "id", "v")
+      .head().getDouble(2) == 5.0)
+    // the one remaining writer (SparkEntry calls it before each query)
+    // writes nothing on an extension-built session
+    GraftExtensions.register(spark)
+    assertSameEntries(before, graftEntries(spark))
+  }
+
+  test("register restores a dropped function and leaves the other entries as they are") {
+    val s2 = spark.newSession()
+    val reg = s2.sessionState.functionRegistry
+    val before = graftEntries(s2)
+    assert(reg.dropFunction(FunctionIdentifier("graft_dot_f")))
+    assert(!graftEntries(s2).contains("graft_dot_f"))
+    GraftExtensions.register(s2)
+    // one builder table: the restored entry is the one the extension injected
+    assertSameEntries(before, graftEntries(s2))
+    assert(s2.sql("SELECT graft_dot_f(array(CAST(1.0 AS FLOAT)), " +
+      "array(CAST(2.0 AS FLOAT))) AS d").head().getDouble(0) == 2.0)
   }
 
   test("GlobalWindowGuard: opt-in flag fails partitionless windows, spares partitioned ones") {
