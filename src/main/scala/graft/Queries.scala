@@ -62,9 +62,9 @@ object Queries {
     val c = read(s, dir, "customer")
     val n = read(s, dir, "nation")
     val r = read(s, dir, "region")
-    val j = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+    val j = o.join(c, o("o_custkey") === c("c_custkey"))
+      .join(n, c("c_nationkey") === n("n_nationkey"))
+      .join(r, n("n_regionkey") === r("r_regionkey"))
     Pivot.groupAgg(j, Seq("r_name", "n_name"), count(lit(1)).as("n_orders"))
   }
 
@@ -160,9 +160,9 @@ object Queries {
       val c = read(s, dir, "customer")
       val n = read(s, dir, "nation")
       val r = read(s, dir, "region")
-      val j = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+      val j = o.join(c, o("o_custkey") === c("c_custkey"))
+        .join(n, c("c_nationkey") === n("n_nationkey"))
+        .join(r, n("n_regionkey") === r("r_regionkey"))
       Pivot.groupAggWithMargins(j, Seq("r_name", "n_name"),
         Seq(count(lit(1)).as("n_orders"))).ordered
     },
@@ -190,7 +190,7 @@ object Queries {
       val o = read(s, dir, "orders")
       val c = read(s, dir, "customer")
       val j = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
+        .join(c, o("o_custkey") === c("c_custkey"))
       val one = lit(1).cast(DecimalType(18, 4))
       Pivot.groupAgg(j, Seq("c_mktsegment"),
         sum(dec2("l_extendedprice") * (one - col("l_discount").cast(DecimalType(18, 4))))
@@ -200,7 +200,7 @@ object Queries {
     "q18_window_topk" -> { (s, dir) =>
       val o = read(s, dir, "orders")
       val c = read(s, dir, "customer")
-      val j = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
+      val j = o.join(c, o("o_custkey") === c("c_custkey"))
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       j.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)

@@ -186,11 +186,11 @@ object Audit {
     val cumM = Checkpoint.materialize(cum)
     val tot = cumM.agg(max(col("cum_types")).as("types_total"),
       max(col("cum_toks")).as("tokens_total"))
-    val kj = ks.toDF("k").crossJoin(broadcast(tot))
+    val kj = ks.toDF("k").crossJoin(tot)
       .withColumn("types_used", least(col("k"), col("types_total")))
     // tiny broadcast side + a range predicate: each k matches exactly the
     // one block whose type-rank interval contains it
-    cumM.join(broadcast(kj),
+    cumM.join(kj,
         col("types_above") < col("types_used") &&
           col("types_used") <= col("cum_types"))
       .withColumn("cum_tokens",
@@ -436,8 +436,8 @@ object Audit {
     * frequencies with the corpus df table BROADCAST (capped `maxVocab`
     * deterministic top-K like [[Keywords.tfidfTopTerms]]), and a per-cell
     * rank window (hash-partitioned by cell). Bounded driver state: the
-    * document count. Float discipline: idf = ln((N+1)/(df+1)) over exact
-    * integers, score rounded to 6 dp BEFORE the rank decision, term
+    * document and term counts. Float discipline: idf = ln((N+1)/(df+1))
+    * over exact integers, score rounded to 6 dp BEFORE the rank decision, term
     * tiebreak — deterministic and replayed in full by the q131 oracle. */
   def semanticAtlas(docs: DataFrame, emb: DataFrame, docIdCol: String,
                     textCol: String, vecIdCol: String, vecCol: String,
@@ -458,15 +458,18 @@ object Audit {
       sum(TextStats.tokenCount(col("__tx")).cast("long")).as("tokens_sum"),
       sum(TextStats.qualityPoints(col("__tx")).cast("long")).as("quality_sum"))
     val n = d.count()
+    // model-sized (<= maxVocab rows); counted once to size its broadcast
     val corpusDf = Keywords.docFreq(d, "__tx")
       .orderBy(col("df").desc, col("term")).limit(maxVocab)
+      .transform(Checkpoint.materialize)
+    val terms = corpusDf.rdd.count() // one job; Dataset.count costs two under AQE
     val cellDf = d.select(col("cell"), TextStats.pinnedCol(
         array_distinct(TextStats.tokens(col("__tx")))).as("__t"))
       .select(col("cell"), explode(col("__t")).as("term"))
       .groupBy(col("cell"), col("term")).agg(count(lit(1)).as("cdf"))
     val idf = log((lit(n) + lit(1L)).cast("double") /
       (coalesce(col("df"), lit(1L)) + lit(1L)).cast("double"))
-    val scored = cellDf.join(broadcast(corpusDf), Seq("term"), "left")
+    val scored = cellDf.join(Broadcast.small(corpusDf, Some(terms)), Seq("term"), "left")
       .select(col("cell"), col("term"),
         round(col("cdf").cast("double") * idf, 6).as("term_score"))
     val w = org.apache.spark.sql.expressions.Window
@@ -562,7 +565,7 @@ object Audit {
     def cellsOf(df: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("id")).orderBy(col("__dd"), col("pid"))
-      df.crossJoin(broadcast(piv))
+      df.crossJoin(piv)
         .select(col("id"), col("v"), col("pid"),
           round(d2c(col("v"), col("pv")), 6).as("__dd"))
         .withColumn("__rn", row_number().over(w))
@@ -594,7 +597,7 @@ object Audit {
     val totals = joined.agg(
       sum(coalesce(col("n_old"), lit(0L))).as("__to"),
       sum(coalesce(col("n_new"), lit(0L))).as("__tn"))
-    joined.crossJoin(broadcast(totals))
+    joined.crossJoin(totals)
       .select(col("cell"),
         coalesce(col("n_old"), lit(0L)).as("n_old"),
         coalesce(col("n_new"), lit(0L)).as("n_new"),

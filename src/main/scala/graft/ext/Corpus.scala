@@ -771,9 +771,15 @@ object Corpus {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid")).orderBy(col(orderCol))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    ranged.join(broadcast(offDf), Seq("__pid"))
+    ranged.join(offDf, Seq("__pid"))
       .withColumn(outCol, sum(v).over(w) + col("__off"))
       .drop("__pid", "__off")
+  }
+
+  /** (largest running sum or 0, row count) of a [[prefixSum]] output. */
+  private[graft] def prefixTotal(cum: DataFrame, outCol: String): (Long, Long) = {
+    val r = cum.agg(coalesce(max(col(outCol)), lit(0L)), count(lit(1))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Per-group quantile normalization of a score column: `q_norm` =
@@ -1816,7 +1822,7 @@ object Corpus {
       .toDF("__pid", "bucket", "__boff")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid"), col("bucket")).orderBy(col(orderCol))
-    ranged.join(broadcast(offDf), Seq("__pid", "bucket"))
+    ranged.join(offDf, Seq("__pid", "bucket"))
       .withColumn("__rk",
         row_number().over(w).cast("long") - 1L + col("__boff"))
       .withColumn("batch_in_bucket", expr("__rk DIV __perb"))
@@ -1881,7 +1887,7 @@ object Corpus {
       .toDF("__pid", "__off")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid")).orderBy(col("__ord"))
-    val ranked = ranged.join(broadcast(offDf), Seq("__pid"))
+    val ranked = ranged.join(offDf, Seq("__pid"))
       .withColumn("__rk", row_number().over(w).cast("long") - 1L + col("__off"))
       .withColumn("__g", expr(s"CAST(__rk DIV ${groupDocs}L AS INT)"))
       .select(col("__g"), col("__rk"), col(idCol), col("__len"))

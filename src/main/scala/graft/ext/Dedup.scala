@@ -433,8 +433,7 @@ object Dedup {
             .filter(col("__df") > mx).select(col("g")))
         val nHot = hot.count()
         if (nHot == 0L) all
-        else if (nHot <= (1L << 22)) all.join(broadcast(hot), Seq("g"), "left_anti")
-        else all.join(hot, Seq("g"), "left_anti")
+        else all.join(Broadcast.small(hot, Some(nHot)), Seq("g"), "left_anti")
       case None => all
     }
     val sizes = post.groupBy("id").agg(count(lit(1)).as("n"))

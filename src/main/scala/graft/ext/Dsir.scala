@@ -118,7 +118,7 @@ object Dsir {
         hashedGramBuckets(col(textCol), buckets, salt)).as("__b"))
       .select(col("__id"), posexplode(col("__b")).as(Seq("pos", "bucket")))
     val agg = exploded
-      .join(broadcast(lrTable), Seq("bucket"), "left")
+      .join(lrTable, Seq("bucket"), "left")
       .withColumn("__lr", coalesce(col("__lr"), lit(unseenLr)))
       .groupBy(col("__id"))
       .agg(
@@ -169,8 +169,8 @@ object Dsir {
     val cum = Corpus.prefixSum(hist.withColumn("__ok", negate(col("ds_logw"))),
         "__ok", "__c", "__cum")
       .drop("__ok").transform(Checkpoint.materialize)
-    if (cum.isEmpty) return scored // empty corpus: nothing to select
-    val n = cum.agg(max(col("__cum"))).head().getLong(0)
+    val (n, values) = Corpus.prefixTotal(cum, "__cum")
+    if (values == 0L) return scored // empty corpus: nothing to select
     val keep = math.ceil(keepFrac * n).toLong
     val boundary = cum.filter(col("__cum") >= keep)
       .orderBy(col("ds_logw").desc).limit(1).head()

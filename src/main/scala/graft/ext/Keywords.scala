@@ -72,7 +72,7 @@ object Keywords {
     val n = df.select(col(idCol)).count()
     val idf = log((lit(n) + lit(1L)).cast("double") /
       (coalesce(col("df"), lit(1L)) + lit(1L)).cast("double"))
-    val scored = tf.join(broadcast(dfT), Seq("term"), "left")
+    val scored = tf.join(dfT, Seq("term"), "left")
       .select(col("__id"), col("term"), col("tf"),
         round(col("tf").cast("double") * idf, 6).as("tfidf"))
     val w = org.apache.spark.sql.expressions.Window

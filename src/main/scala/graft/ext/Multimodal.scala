@@ -134,19 +134,47 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** The most pixels any decoder here allocates for one image, video frame
+    * or GIF canvas (64 M = 256 MiB packed). Headers are untrusted bytes, so
+    * each decoder checks the DECLARED size first and drops the row above
+    * it: an OutOfMemoryError is an Error no NonFatal catch swallows. */
+  private[graft] val MaxImagePixels: Long = 64L * 1024 * 1024
+
+  /** `f` over the first ImageIO reader that claims `in` (forward-only
+    * unless `seekable`, as `ImageIO.read` sets it); None if none does. */
+  private def withReader[T](in: javax.imageio.stream.ImageInputStream,
+                            seekable: Boolean)(
+      f: javax.imageio.ImageReader => Option[T]): Option[T] = {
+    val readers = javax.imageio.ImageIO.getImageReaders(in)
+    if (!readers.hasNext) { in.close(); None }
+    else {
+      val reader = readers.next()
+      try { reader.setInput(in, !seekable, !seekable); f(reader) }
+      finally { reader.dispose(); in.close() }
+    }
+  }
+
+  /** Image `i`'s header declares at most [[MaxImagePixels]]. */
+  private def fits(reader: javax.imageio.ImageReader, i: Int): Boolean =
+    reader.getWidth(i).toLong * reader.getHeight(i) <= MaxImagePixels
+
+  private def pixels(img: java.awt.image.BufferedImage): (Int, Int, Array[Int]) = {
+    val (w, h) = (img.getWidth, img.getHeight)
+    (w, h, img.getRGB(0, 0, w, h, null, 0, w))
+  }
+
+  private def readFirst(in: javax.imageio.stream.ImageInputStream): Option[(Int, Int, Array[Int])] =
+    withReader(in, seekable = false)(r => if (fits(r, 0)) Some(pixels(r.read(0))) else None)
+
   /** REAL image decode via the JDK's ImageIO (PNG/JPEG/GIF/BMP readers are
     * built in — zero new dependencies): container bytes → (width, height,
     * packed 0xRRGGBB pixels, row-major). None for undecodable payloads —
     * at corpus scale some fraction of crawled media is always corrupt, and
-    * a poison byte string must drop the ROW, not the executor. */
+    * a poison byte string must drop the ROW, not the executor — and for
+    * images whose header declares more than [[MaxImagePixels]]. */
   def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    try {
-      Option(javax.imageio.ImageIO.read(memIn(bytes)))
-        .map { img =>
-          val (w, h) = (img.getWidth, img.getHeight)
-          (w, h, img.getRGB(0, 0, w, h, null, 0, w))
-        }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try readFirst(memIn(bytes))
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Deterministic synthetic RGB image: pixel (x, y) of image `id` carries
     * channels r = (id + 3x + 5y) % 256, g = (2·id + 7x + y) % 256,
@@ -431,23 +459,15 @@ object Multimodal {
   def decodeFrames(bytes: Array[Byte]): Option[IndexedSeq[(Int, Int, Array[Int])]] =
     if (isAvi(bytes)) parseAviFrames(bytes)
     else try {
-      val iis = memIn(bytes)
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) { iis.close(); None }
-      else {
-        val reader = readers.next()
-        try {
-          reader.setInput(iis) // seekable input: getNumImages(true) may search
-          val n = reader.getNumImages(true)
-          if (n <= 0) None
-          else if (reader.getFormatName.equalsIgnoreCase("gif"))
-            Some(gifComposited(reader, n))
-          else Some((0 until n).map { i =>
-            val img = reader.read(i)
-            val (w, h) = (img.getWidth, img.getHeight)
-            (w, h, img.getRGB(0, 0, w, h, null, 0, w))
-          })
-        } finally { reader.dispose(); iis.close() }
+      // seekable input: getNumImages(true) may search
+      withReader(memIn(bytes), seekable = true) { reader =>
+        val n = reader.getNumImages(true)
+        if (n <= 0) None
+        else if (reader.getFormatName.equalsIgnoreCase("gif"))
+          Some(gifComposited(reader, n))
+        else if ((0 until n).forall(fits(reader, _)))
+          Some((0 until n).map(i => pixels(reader.read(i))))
+        else None
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -463,11 +483,12 @@ object Multimodal {
     * (SRC_OVER), which is exactly the delta-frame optimization this
     * compositing exists to honor.
     *
-    * Memory bounds (all untrusted-metadata driven, so all guarded): the
-    * canvas is capped at 64 M pixels — the same cap as [[parseAviFrames]] —
-    * because the logical screen descriptor and frame offsets are attacker
-    * bytes (each u16 up to 65535; a declared 40000×40000 screen around
-    * tiny frames would otherwise force multi-GB allocations, and
+    * Memory bounds (all untrusted-metadata driven, so all guarded, from
+    * headers and metadata BEFORE any frame is decoded): the canvas is
+    * capped at [[MaxImagePixels]] — the same cap as [[parseAviFrames]] —
+    * because the logical screen descriptor, frame sizes and offsets are
+    * attacker bytes (each u16 up to 65535; a declared 40000×40000 screen
+    * around tiny frames would otherwise force multi-GB allocations, and
     * OutOfMemoryError is an Error the NonFatal catch in [[decodeFrames]]
     * deliberately does NOT swallow). The RETAINED footprint — n output
     * frames plus up to two transient canvas snapshots for
@@ -490,10 +511,9 @@ object Multimodal {
           d.getAttribute("logicalScreenHeight").toInt)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
-    case class Frame(img: java.awt.image.BufferedImage,
+    case class Frame(i: Int, w: Int, h: Int,
                      left: Int, top: Int, disposal: String)
     val frames = (0 until n).map { i =>
-      val img = reader.read(i)
       val (l, t, d) = (try {
         val root = reader.getImageMetadata(i)
           .getAsTree("javax_imageio_gif_image_1.0").asInstanceOf[IIOMetadataNode]
@@ -503,17 +523,17 @@ object Multimodal {
           child(root, "GraphicControlExtension")
             .map(_.getAttribute("disposalMethod")).getOrElse("none"))
       } catch { case scala.util.control.NonFatal(_) => (0, 0, "none") })
-      Frame(img, l, t, d)
+      Frame(i, reader.getWidth(i), reader.getHeight(i), l, t, d)
     }
     val cw = math.max(screen.map(_._1).getOrElse(0),
-      frames.map(f => f.left + f.img.getWidth).max)
+      frames.map(f => f.left + f.w).max)
     val ch = math.max(screen.map(_._2).getOrElse(0),
-      frames.map(f => f.top + f.img.getHeight).max)
-    // guard BEFORE the first canvas-sized allocation: cw/ch derive from
-    // attacker-controlled metadata, and an OOM would kill the task, not
-    // the row (see scaladoc)
-    if (cw.toLong * ch > 64L * 1024 * 1024)
-      throw new java.io.IOException(s"GIF canvas $cw x $ch exceeds 64M pixels")
+      frames.map(f => f.top + f.h).max)
+    // guard BEFORE the first frame decode or canvas-sized allocation: cw/ch
+    // derive from attacker-controlled metadata, and an OOM would kill the
+    // task, not the row (see scaladoc); every frame lies inside the canvas
+    if (cw.toLong * ch > MaxImagePixels)
+      throw new java.io.IOException(s"GIF canvas $cw x $ch exceeds $MaxImagePixels pixels")
     if (n.toLong * cw * ch > 256L * 1024 * 1024)
       throw new java.io.IOException(
         s"GIF composited output $n x $cw x $ch exceeds 256M pixels")
@@ -528,7 +548,7 @@ object Multimodal {
             case "restoreToBackgroundColor" =>
               val old = g.getComposite
               g.setComposite(java.awt.AlphaComposite.Clear)
-              g.fillRect(pf.left, pf.top, pf.img.getWidth, pf.img.getHeight)
+              g.fillRect(pf.left, pf.top, pf.w, pf.h)
               g.setComposite(old)
             case "restoreToPrevious" =>
               canvas.setRGB(0, 0, cw, ch, beforePrev, 0, cw)
@@ -536,7 +556,7 @@ object Multimodal {
           }
         }
         val before = canvas.getRGB(0, 0, cw, ch, null, 0, cw)
-        g.drawImage(f.img, f.left, f.top, null)
+        g.drawImage(reader.read(f.i), f.left, f.top, null)
         prev = Some((f, before))
         (cw, ch, canvas.getRGB(0, 0, cw, ch, null, 0, cw))
       }
@@ -718,16 +738,13 @@ object Multimodal {
           (fo, flen, compressed)
       }
       if (!haveFmt || mine.isEmpty || vw <= 0 || h == 0 ||
-          vw.toLong * h > 64L * 1024 * 1024) None
+          vw.toLong * h > MaxImagePixels) None
       else Some(mine.map { case (fo, flen, compressed) =>
-        if (compressed || mjpg) {
-          val img = javax.imageio.ImageIO.read(
-            new javax.imageio.stream.MemoryCacheImageInputStream(
+        if (compressed || mjpg)
+          readFirst(new javax.imageio.stream.MemoryCacheImageInputStream(
               new java.io.ByteArrayInputStream(bytes, fo, flen)))
-          if (img == null) throw new java.io.IOException("undecodable frame")
-          val (w2, h2) = (img.getWidth, img.getHeight)
-          (w2, h2, img.getRGB(0, 0, w2, h2, null, 0, w2))
-        } else {
+            .getOrElse(throw new java.io.IOException("undecodable or oversized frame"))
+        else {
           if (bits != 24) throw new java.io.IOException(s"DIB depth $bits")
           val rowStride = ((vw * 3 + 3) / 4) * 4 // rows pad to 4 bytes
           if (flen.toLong < rowStride.toLong * h)

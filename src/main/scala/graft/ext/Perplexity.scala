@@ -68,9 +68,11 @@ object Perplexity {
     * score any frame, or every arriving micro-batch, under the SAME
     * counts (the [[graft.ext.Classifier.LinearModel]] posture for LMs:
     * continuous ingestion reuses the batch scorer unchanged, so stream
-    * and batch scores CANNOT drift). */
+    * and batch scores CANNOT drift). Both tables' row counts size the
+    * scoring broadcasts, so scoring a micro-batch runs no count. */
   case class BigramModel(gramC: DataFrame, ctxC: DataFrame, vocab: Long,
-                         nTotal: Long, n: Int, k: Long)
+                         nTotal: Long, n: Int, k: Long,
+                         gramRows: Long, ctxRows: Long)
 
   /** Train the frozen model of [[perplexityScore]] — see there for the
     * probability form and determinism discipline. */
@@ -86,17 +88,20 @@ object Perplexity {
     val ctxC =
       if (n > 1) capVocab(ngramCounts(ref, textCol, n - 1, tokenizer), maxVocab)
       else null
-    // V is a bounded collect (one long) over the CAPPED unigram table (cut
-    // grams score as unseen, so the capped table IS the vocabulary); an
-    // already-built capped table is reused when the order allows
+    // V (and a unigram model's N) is one bounded collect over the CAPPED
+    // unigram table (cut grams score as unseen, so the capped table IS the
+    // vocabulary); a built capped table (and its count) is reused if it can
     val uni =
       if (n == 1) gramC
       else if (n == 2) ctxC
       else capVocab(ngramCounts(ref, textCol, 1, tokenizer), maxVocab)
-    val vocab = uni.select(count(lit(1))).head().getLong(0) + 1L
-    val nTotal: Long =
-      if (n == 1) uni.agg(sum(col("c"))).head().getLong(0) else 0L
-    BigramModel(gramC, ctxC, vocab, nTotal, n, k)
+    val u = uni.agg(count(lit(1)), sum(col("c"))).head()
+    val vocab = u.getLong(0) + 1L
+    val nTotal: Long = if (n == 1) u.getLong(1) else 0L
+    // RDD counts: one job each, where Dataset.count's exchange costs two
+    val gramRows = if (n == 1) vocab - 1L else gramC.rdd.count()
+    val ctxRows = if (n == 1) 0L else if (n == 2) vocab - 1L else ctxC.rdd.count()
+    BigramModel(gramC, ctxC, vocab, nTotal, n, k, gramRows, ctxRows)
   }
 
   /** Per-document LM score under an order-`n` add-`k` model trained on
@@ -158,8 +163,12 @@ object Perplexity {
   /** The scoring half of [[scoredGrams]], under a frozen model. */
   private def scoredGramsWithModel(df: DataFrame, idCol: String,
                                    textCol: String, model: BigramModel,
-                                   tokenizer: Column => Column): (DataFrame, Column) = {
-    val BigramModel(gramC, ctxC, vocab, nTotal, n, k) = model
+                                   tokenizer: Column => Column): (DataFrame, Column) =
+    (withCounts(gramStream(df, idCol, textCol, model.n, tokenizer), model), nllOf(model))
+
+  /** The exploded (__id, pos, gram, ctx) order-`n` gram stream of `df`. */
+  private def gramStream(df: DataFrame, idCol: String, textCol: String, n: Int,
+                         tokenizer: Column => Column): DataFrame = {
     val toks = tokenizer(coalesce(col(textCol), lit("")))
     val grams = TextStats.ngramsOfTokens(toks, n)
     val ctxs = if (n > 1) TextStats.ngramsOfTokens(toks, n - 1) else lit(null)
@@ -168,26 +177,30 @@ object Perplexity {
     // both without a second generator. Both arrays are PINNED
     // (TextStats.pinnedCol): un-pinned, the optimizer inlines them into
     // the Generate and rebuilds the n-gram array per exploded row
-    val exploded = df
-      .select(col(idCol).as("__id"), TextStats.pinnedCol(grams).as("__g"),
+    df.select(col(idCol).as("__id"), TextStats.pinnedCol(grams).as("__g"),
         (if (n > 1) TextStats.pinnedCol(ctxs) else lit(null).cast("string")).as("__cx"))
       .select(col("__id"), col("__cx"),
         posexplode(col("__g")).as(Seq("pos", "gram")))
       .select(col("__id"), col("pos"), col("gram"),
         (if (n > 1) element_at(col("__cx"), col("pos") + 1)
          else lit("")).as("ctx"))
-    val joined = exploded
-      .join(broadcast(gramC.withColumnRenamed("c", "__cg")), Seq("gram"), "left")
-    val withCtx =
-      if (n > 1)
-        joined.join(broadcast(ctxC.select(col("gram").as("ctx"), col("c").as("__cc"))),
-          Seq("ctx"), "left")
-      else joined.withColumn("__cc", lit(nTotal))
-    val nll = -log(
-      (coalesce(col("__cg"), lit(0L)) + lit(k)).cast("double") /
-        (coalesce(col("__cc"), lit(0L)) + lit(k) * lit(vocab)).cast("double"))
-    (withCtx, nll)
   }
+
+  /** A gram stream with model `m`'s counts joined on as `__cg<suf>` and
+    * `__cc<suf>` (a unigram model's context count is its token total). */
+  private def withCounts(base: DataFrame, m: BigramModel, suf: String = ""): DataFrame = {
+    val joined = base.join(Broadcast.small(
+      m.gramC.withColumnRenamed("c", s"__cg$suf"), Some(m.gramRows)), Seq("gram"), "left")
+    if (m.n > 1)
+      joined.join(Broadcast.small(m.ctxC.select(col("gram").as("ctx"),
+        col("c").as(s"__cc$suf")), Some(m.ctxRows)), Seq("ctx"), "left")
+    else joined.withColumn(s"__cc$suf", lit(m.nTotal))
+  }
+
+  /** Per-gram NLL under model `m`, over the columns [[withCounts]] adds. */
+  private def nllOf(m: BigramModel, suf: String = ""): Column = -log(
+    (coalesce(col(s"__cg$suf"), lit(0L)) + lit(m.k)).cast("double") /
+      (coalesce(col(s"__cc$suf"), lit(0L)) + lit(m.k) * lit(m.vocab)).cast("double"))
 
   /** Min-K% Prob (Shi et al. 2023, "Detecting Pretraining Data from Large
     * Language Models" — the public membership-inference / memorization
@@ -271,8 +284,9 @@ object Perplexity {
     require(maxVocab >= 1, s"maxVocab must be >= 1, got $maxVocab")
     val bgC = capVocab(ngramCounts(ref, textCol, 2, tokenizer), maxVocab)
     val uniC = capVocab(ngramCounts(ref, textCol, 1, tokenizer), maxVocab)
-    val vocab = uniC.select(count(lit(1))).head().getLong(0) + 1L
-    val nTotal = uniC.agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
+    val u = uniC.agg(count(lit(1)), coalesce(sum(col("c")), lit(0L))).head()
+    val (uniRows, nTotal, bgRows) = (u.getLong(0), u.getLong(1), bgC.rdd.count())
+    val vocab = uniRows + 1L
 
     val toks = tokenizer(coalesce(col(textCol), lit("")))
     // bigram at pos i (0-based) spans tokens[i], tokens[i+1]: context and
@@ -288,10 +302,13 @@ object Perplexity {
         element_at(col("__t"), col("pos") + 1).as("ctx"),
         element_at(col("__t"), col("pos") + 2).as("w"))
     val joined = exploded
-      .join(broadcast(bgC.withColumnRenamed("c", "__cbg")), Seq("gram"), "left")
-      .join(broadcast(uniC.select(col("gram").as("ctx"), col("c").as("__ccx"))),
+      .join(Broadcast.small(bgC.withColumnRenamed("c", "__cbg"), Some(bgRows)),
+        Seq("gram"), "left")
+      .join(Broadcast.small(
+        uniC.select(col("gram").as("ctx"), col("c").as("__ccx")), Some(uniRows)),
         Seq("ctx"), "left")
-      .join(broadcast(uniC.select(col("gram").as("w"), col("c").as("__cw"))),
+      .join(Broadcast.small(
+        uniC.select(col("gram").as("w"), col("c").as("__cw")), Some(uniRows)),
         Seq("w"), "left")
     // a capped context can orphan a surviving bigram (c_bg without c_ctx):
     // such positions take the backoff branch rather than divide by zero
@@ -373,30 +390,8 @@ object Perplexity {
     // a dedicated single-query subset (and 5.86 vs 5.80 in a paired run) —
     // a wash locally; the fusion stays for its scale shape (one exploded
     // gram stream instead of pass 1 executing twice).
-    val n = inModel.n
-    val toks = tokenizer(coalesce(col(textCol), lit("")))
-    val grams = TextStats.ngramsOfTokens(toks, n)
-    val ctxs = if (n > 1) TextStats.ngramsOfTokens(toks, n - 1) else lit(null)
-    val exploded = df
-      .select(col(idCol).as("__id"), TextStats.pinnedCol(grams).as("__g"),
-        (if (n > 1) TextStats.pinnedCol(ctxs) else lit(null).cast("string")).as("__cx"))
-      .select(col("__id"), col("__cx"),
-        posexplode(col("__g")).as(Seq("pos", "gram")))
-      .select(col("__id"), col("pos"), col("gram"),
-        (if (n > 1) element_at(col("__cx"), col("pos") + 1)
-         else lit("")).as("ctx"))
-    def withModel(base: DataFrame, m: BigramModel, suf: String): DataFrame = {
-      val joined = base.join(
-        broadcast(m.gramC.withColumnRenamed("c", s"__cg$suf")), Seq("gram"), "left")
-      if (n > 1)
-        joined.join(broadcast(m.ctxC.select(col("gram").as("ctx"),
-          col("c").as(s"__cc$suf"))), Seq("ctx"), "left")
-      else joined.withColumn(s"__cc$suf", lit(m.nTotal))
-    }
-    val scored = withModel(withModel(exploded, inModel, "_in"), genModel, "_gen")
-    def nllOf(m: BigramModel, suf: String): Column = -log(
-      (coalesce(col(s"__cg$suf"), lit(0L)) + lit(m.k)).cast("double") /
-        (coalesce(col(s"__cc$suf"), lit(0L)) + lit(m.k) * lit(m.vocab)).cast("double"))
+    val scored = withCounts(withCounts(
+      gramStream(df, idCol, textCol, inModel.n, tokenizer), inModel, "_in"), genModel, "_gen")
     // identical aggregate expressions share one buffer (Spark dedupes
     // semantically-equal aggregate functions), so the pos-sorted struct
     // list is collected once and folded twice — each fold in the same
@@ -452,9 +447,9 @@ object Perplexity {
       .groupBy(col("ml_score")).agg(count(lit(1)).as("__c"))
     val cum = Corpus.prefixSum(hist, "ml_score", "__c", "__cum")
       .transform(Checkpoint.materialize)
-    if (cum.isEmpty) // nothing scorable: nothing selected
+    val (nScored, values) = Corpus.prefixTotal(cum, "__cum")
+    if (values == 0L) // nothing scorable: nothing selected
       return scored.withColumn("selected", lit(false))
-    val nScored = cum.agg(max(col("__cum"))).head().getLong(0)
     val keep = math.ceil(keepFrac * nScored).toLong
     val boundary = cum.filter(col("__cum") >= keep)
       .orderBy(col("ml_score")).limit(1).head()
@@ -508,15 +503,15 @@ object Perplexity {
     // projection, so materialized once.
     val cum = Corpus.prefixSum(hist, scoreCol, "__c", "__cum")
       .transform(Checkpoint.materialize)
-    if (cum.isEmpty) // no scorable documents: every label is null
+    val (n, values) = Corpus.prefixTotal(cum, "__cum")
+    if (values == 0L) // no scorable documents: every label is null
       return scoredM.withColumn(bucketCol, lit(null).cast("string"))
-    val n = cum.agg(max(col("__cum"))).head().getLong(0)
     val headN = math.floor(n * headFrac)
     val tailStart = n - math.floor(n * tailFrac)
     val labels = cum.select(col(scoreCol),
       when(col("__cum") <= lit(headN), lit("head"))
         .when(col("__cum") - col("__c") >= lit(tailStart), lit("tail"))
         .otherwise(lit("middle")).as(bucketCol))
-    scoredM.join(broadcast(labels), Seq(scoreCol), "left")
+    scoredM.join(Broadcast.small(labels, Some(values)), Seq(scoreCol), "left")
   }
 }

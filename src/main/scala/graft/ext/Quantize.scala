@@ -63,7 +63,7 @@ object Quantize {
       (col("qqn") * col("qn")), 6)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("qcos_sim").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
+    c.crossJoin(q)
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id").as("neighbor_id"), qcos.as("qcos_sim"))
       .withColumn("rank", row_number().over(w))
@@ -84,7 +84,9 @@ object Quantize {
                   m: Int, ksub: Int): DataFrame = {
     require(m >= 1, s"m must be >= 1, got $m")
     require(ksub >= 1, s"ksub must be >= 1, got $ksub")
-    val dim = train.select(size(col(vecCol))).head().getInt(0)
+    val first = train.select(size(col(vecCol))).take(1)
+    require(first.nonEmpty, "pqCodebooks needs a non-empty train slice")
+    val dim = first.head.getInt(0)
     require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
     val w = Window.partitionBy(col("sub")).orderBy(col("mid"))
@@ -147,7 +149,7 @@ object Quantize {
       // per-row argmin (pqEncode's fold: strictly-smaller replaces, so the
       // lowest code wins rounded-distance ties), then exact integer sums of
       // the 1e-6-quantized member components per (sub, code, dim)
-      val assigned = svs.join(broadcast(packedPerSub), Seq("sub"))
+      val assigned = svs.join(packedPerSub, Seq("sub"))
         .select(col("sub"), col("sv"),
           aggregate(sequence(lit(0), size(col("cents")) - 1),
             struct(lit(Double.MaxValue).as("d"), lit(-1).as("c")),
@@ -369,11 +371,11 @@ object Quantize {
     // pair, never touching raw subvectors or centroids
     val q = queries.select(col(idCol).as("qid"),
         Similarity.toDouble(col(vecCol)).as("qv"))
-      .crossJoin(broadcast(packCodebooks(cbs)))
+      .crossJoin(packCodebooks(cbs))
       .select(col("qid"), adcQueryTable(col("qv"), col("cb")).as("qtab"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("adc_dist"), col("neighbor_id"))
-    enc.crossJoin(broadcast(q))
+    enc.crossJoin(Broadcast.small(q))
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id").as("neighbor_id"),
         round(graft.funcs.VectorFunctions.adcSum(col("qtab"), col("codes")),
@@ -483,7 +485,7 @@ object Quantize {
           get(pidArr, col("__ci")).as("cell"),
           get(pvArr, col("__ci")).as("pv"))
     } else {
-      val scored = df.crossJoin(broadcast(piv))
+      val scored = df.crossJoin(piv)
         .select(col("id"), col("v"), col("pid"),
           round(d2(col("v"), col("pv")), 6).as("__dd"), col("pv"))
       if (keep == 1)
@@ -583,7 +585,7 @@ object Quantize {
     val probes =
       (if (residual) residualOf(probes0, "qv") else probes0.withColumn("qv", col("v")))
         .select(col("id").as("qid"), col("qv"), col("cell"))
-        .crossJoin(broadcast(packCodebooks(cbs)))
+        .crossJoin(packCodebooks(cbs))
         .select(col("qid"), col("cell"),
           adcQueryTable(col("qv"), col("cb")).as("qtab"))
     val w = Window.partitionBy(col("qid"))
@@ -776,30 +778,9 @@ object Quantize {
       zip_with(col("qbits"), col("bits"),
         (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
       lit(0L), (acc, x) => acc + x)
-    val wH = Window.partitionBy(col("qid")).orderBy(col("ham"), col("id"))
-    val kH = if (rerank == 0) topK else topK * rerank
-    val cands = cB.join(broadcast(qB), col("id") =!= col("qid"))
-      .select(col("qid"), col("id"), ham.as("ham"))
-      .withColumn("rank", row_number().over(wH))
-      .filter(col("rank") <= kH)
-    if (rerank == 0)
-      return cands.select(col("qid"), col("id").as("neighbor_id"),
-        col("ham"), col("rank"))
-    // exact re-rank: candidate-sized joins back to full precision, the
-    // q38/q56 cosine convention (codegen'd float dot, 6 dp, id tiebreak)
-    val c = Similarity.prepared(corpus, idCol, vecCol)
-    val q = Similarity.prepared(queries, idCol, vecCol)
-      .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wC = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cands.select(col("qid"), col("id"))
-      .join(c, Seq("id"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("id").as("neighbor_id"),
-        round(graft.funcs.VectorFunctions.dotF(col("qv"), col("v")) /
-          (col("qnrm") * col("nrm")), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= topK)
+    Similarity.twoStageTopK(cB.join(qB, col("id") =!= col("qid"))
+        .select(col("qid"), col("id"), ham.as("ham")), "ham",
+      corpus, queries, idCol, vecCol, topK, rerank)
   }
 
   /** Relative L2 reconstruction error per vector:

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dimensionality reduction for embedding columns — the rungs between raw
@@ -62,28 +61,9 @@ object Reduce {
       .select(col("id").as("qid"), col("y").as("qy"))
     val d2 = aggregate(zip_with(col("qy"), col("y"), (a, b) => (a - b) * (a - b)),
       lit(0.0), _ + _)
-    val wP = Window.partitionBy(col("qid")).orderBy(col("jl_d2"), col("id"))
-    val kP = if (rerank == 0) topK else topK * rerank
-    val cands = cP.join(broadcast(qP), col("id") =!= col("qid"))
-      .select(col("qid"), col("id"), round(d2, 6).as("jl_d2"))
-      .withColumn("rank", row_number().over(wP))
-      .filter(col("rank") <= kP)
-    if (rerank == 0)
-      return cands.select(col("qid"), col("id").as("neighbor_id"),
-        col("jl_d2"), col("rank"))
-    val c = Similarity.prepared(corpus, idCol, vecCol)
-    val q = Similarity.prepared(queries, idCol, vecCol)
-      .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wC = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cands.select(col("qid"), col("id"))
-      .join(c, Seq("id"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("id").as("neighbor_id"),
-        round(graft.funcs.VectorFunctions.dotF(col("qv"), col("v")) /
-          (col("qnrm") * col("nrm")), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= topK)
+    Similarity.twoStageTopK(cP.join(qP, col("id") =!= col("qid"))
+        .select(col("qid"), col("id"), round(d2, 6).as("jl_d2")), "jl_d2",
+      corpus, queries, idCol, vecCol, topK, rerank)
   }
 
   /** PCA model: per-dimension mean + top-k principal components. */

@@ -85,7 +85,7 @@ object Retrieval {
     // feeds the df aggregate AND the scoring join — one materialization
     // (sized by the probed postings, the operator's true working set — the
     // bulk-probe regime can make this corpus-scale)
-    val hit = Checkpoint.materialize(post.join(broadcast(qterms), Seq("term")))
+    val hit = Checkpoint.materialize(post.join(qterms, Seq("term")))
     // stopword pruning: a term in more than maxDfFrac of the corpus scores
     // ~0 idf but costs O(N) postings rows — drop it before the fan-out
     val dfCap = math.max(1L, (maxDfFrac * nDocs.toDouble).toLong)
@@ -102,8 +102,8 @@ object Retrieval {
     // independent, so the shuffle-ordered SUM is safe AND stays inside
     // whole-stage codegen (no per-group array). Magnitudes are tiny:
     // idf ≤ ln(1 + 2N), tfn < k1 + 1 → contrib·10⁶ ≪ 2^63.
-    val scored = hit.join(broadcast(dfT), Seq("term"))
-      .join(broadcast(qtM), Seq("term"))
+    val scored = hit.join(dfT, Seq("term"))
+      .join(qtM, Seq("term"))
       .select(col("qid"), col("id"),
         floor(idf * tfn * lit(1000000.0)).cast("long").as("__c6"))
     val agg = scored.groupBy(col("qid"), col("id"))

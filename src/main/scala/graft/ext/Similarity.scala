@@ -44,6 +44,42 @@ object Similarity {
       .withColumn("nrm", sqrt(graft.funcs.VectorFunctions.dotF(col("v"), col("v"))))
   }
 
+  /** The `topK` corpus rows per query among `pairs` — rows carrying query
+    * (qid, qv, qnrm) and corpus (id, v, nrm) columns — by the q38/q56
+    * cosine (codegen'd float dot, 6 dp), id tiebreak. */
+  private def topKByCosine(pairs: DataFrame, topK: Int): DataFrame = {
+    val cos = round(graft.funcs.VectorFunctions.dotF(col("qv"), col("v")) /
+      (col("qnrm") * col("nrm")), 6)
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("neighbor_id"))
+    pairs.select(col("qid"), col("id").as("neighbor_id"), cos.as("cos_sim"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= topK)
+  }
+
+  /** Exact re-rank of candidate `(qid, id)` pairs, the last stage of the
+    * two-stage ANN operators: candidate-sized joins back to the raw vectors,
+    * then [[topKByCosine]]. */
+  private def rerankByCosine(cands: DataFrame, corpus: DataFrame,
+                             queries: DataFrame, idCol: String,
+                             vecCol: String, topK: Int): DataFrame = {
+    val q = prepared(queries, idCol, vecCol)
+      .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
+    topKByCosine(cands.join(prepared(corpus, idCol, vecCol), Seq("id")).join(q, Seq("qid")), topK)
+  }
+
+  /** Two-stage ANN over first-stage `scored` (qid, id, `dist`) pairs: the
+    * `topK · rerank` smallest (`dist`, id) per query, re-ranked by
+    * [[rerankByCosine]]; `rerank = 0` returns the first-stage ranking. */
+  private[graft] def twoStageTopK(scored: DataFrame, dist: String,
+                                  corpus: DataFrame, queries: DataFrame, idCol: String,
+                                  vecCol: String, topK: Int, rerank: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col(dist), col("id"))
+    val cands = scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= (if (rerank == 0) topK else topK * rerank))
+    if (rerank == 0) cands.select(col("qid"), col("id").as("neighbor_id"), col(dist), col("rank"))
+    else rerankByCosine(cands.select(col("qid"), col("id")), corpus, queries, idCol, vecCol, topK)
+  }
+
   private def cosOf(a: String, b: String): Column =
     round(graft.funcs.VectorFunctions.dotF(col(s"$a.v"), col(s"$b.v")) /
       (col(s"$a.nrm") * col(s"$b.nrm")), 6)
@@ -103,14 +139,7 @@ object Similarity {
     val c = prepared(corpus, idCol, vecCol)
     val q = prepared(queries, idCol, vecCol)
       .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val cos = round(graft.funcs.VectorFunctions.dotF(col("qv"), col("v")) /
-      (col("qnrm") * col("nrm")), 6)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id").as("neighbor_id"), cos.as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    topKByCosine(c.crossJoin(q).filter(col("id") =!= col("qid")), topK)
   }
 
   // ---- random-hyperplane LSH -------------------------------------------
@@ -187,16 +216,10 @@ object Similarity {
     val thresholds: Seq[Long] = if (center) centerThresholds(c, bits) else Nil
     val cBand = bandedIds(c, "id", "v", bits, bands, mix, thresholds)
     val qBand = bandedIds(q, "qid", "qv", bits, bands, mix, thresholds)
-    val cands = cBand.join(broadcast(qBand), Seq("bk"))
+    val cands = cBand.join(qBand, Seq("bk"))
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id")).distinct()
-    val cos = round(graft.funcs.VectorFunctions.dotF(col("qv"), col("v")) /
-      (col("qnrm") * col("nrm")), 6)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cands.join(c, Seq("id")).join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("id").as("neighbor_id"), cos.as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    rerankByCosine(cands, corpus, queries, idCol, vecCol, topK)
   }
 
   /** IVF (inverted-file) ANN: a coarse quantizer assigns every corpus vector
@@ -263,7 +286,7 @@ object Similarity {
     // reach the exchange — K× less shuffle IO, the difference that
     // matters when n is the corpus. Ordering key (pcos, -pid) reproduces
     // the window's (pcos DESC, pid ASC) tie-break exactly.
-    c.crossJoin(broadcast(pv))
+    c.crossJoin(pv)
       .select(col("id"), col("v"), col("nrm"), col("pid"), pcos.as("pcos"))
       .groupBy(col("id"))
       .agg(max_by(
@@ -287,19 +310,12 @@ object Similarity {
       (col("qnrm") * col("pnrm")), 6)
     val byQuery = Window.partitionBy(col("qid"))
       .orderBy(col("qpcos").desc, col("pid"))
-    val probes = q.crossJoin(broadcast(pv))
+    val probes = q.crossJoin(pv)
       .select(col("qid"), col("qv"), col("qnrm"), col("pid"), qpcos.as("qpcos"))
       .withColumn("rn", row_number().over(byQuery))
       .filter(col("rn") <= nProbe)
       .select(col("qid"), col("qv"), col("qnrm"), col("pid").as("cell"))
-    val cos = round(graft.funcs.VectorFunctions.dotF(col("qv"), col("v")) /
-      (col("qnrm") * col("nrm")), 6)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    assigned.join(probes, Seq("cell"))
-      .filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id").as("neighbor_id"), cos.as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    topKByCosine(assigned.join(probes, Seq("cell")).filter(col("id") =!= col("qid")), topK)
   }
 
   /** Build and PERSIST an IVF index — the index-once / query-many shape a
@@ -559,7 +575,7 @@ object Similarity {
         (col("nrm") * col("pnrm")), 6)
       val byCell = Window.partitionBy(col("id"))
         .orderBy(col("pcos").desc, col("pid"))
-      val sums = p.crossJoin(broadcast(pv))
+      val sums = p.crossJoin(pv)
         .select(col("id"), col("v"), col("nrm"), col("pid"), pcos.as("pcos"))
         .withColumn("rn", row_number().over(byCell))
         .filter(col("rn") === 1)
@@ -1046,14 +1062,15 @@ object Similarity {
         row_number().over(Window.orderBy(col("cell"))) - 1)
     val kTot = cellOrd.agg(count(lit(1)).as("__k"))
     assigned.select(col("id").as("anchor_id"), col("cell"))
-      .join(broadcast(cellOrd.select(col("cell"), col("__ord"))), Seq("cell"))
-      .crossJoin(broadcast(kTot))
+      .join(Broadcast.small(cellOrd.select(col("cell"), col("__ord")), Some(k.toLong)),
+        Seq("cell"))
+      .crossJoin(kTot)
       .withColumn("__pord",
         when(col("__k") > 1,
           pmod(col("__ord") + 1 + pmod(col("anchor_id"), col("__k") - 1),
             col("__k"))))
-      .join(broadcast(cellOrd.select(col("__ord").as("__pord"),
-        col("rep_id").as("easy_id"))), Seq("__pord"), "left")
+      .join(Broadcast.small(cellOrd.select(col("__ord").as("__pord"),
+        col("rep_id").as("easy_id")), Some(k.toLong)), Seq("__pord"), "left")
       .join(mined, col("anchor_id") === col("a"))
       .filter(col("__p").isNotNull)
       .select(col("anchor_id"),
@@ -1201,14 +1218,14 @@ object Similarity {
     // histogram through one task at scale (see Corpus.prefixSum).
     val cum = Corpus.prefixSum(hist, "vec_norm", "__c", "__cum")
       .transform(Checkpoint.materialize)
-    if (cum.isEmpty) return scored
-    val n = cum.agg(max(col("__cum"))).head().getLong(0)
+    val (n, values) = Corpus.prefixTotal(cum, "__cum")
+    if (values == 0L) return scored
     val lowN = math.floor(n * dropLowFrac)
     val highStart = n - math.floor(n * dropHighFrac)
     val keepVals = cum.filter(!(col("__cum") <= lit(lowN)) &&
         !(col("__cum") - col("__c") >= lit(highStart)))
       .select(col("vec_norm"))
-    scored.join(broadcast(keepVals), Seq("vec_norm"), "left_semi")
+    scored.join(Broadcast.small(keepVals, Some(values)), Seq("vec_norm"), "left_semi")
       .select((df.columns :+ "vec_norm").map(col): _*)
   }
 }

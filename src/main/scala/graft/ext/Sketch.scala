@@ -221,7 +221,7 @@ object Sketch {
     val expanded = candidates
       .select(col(itemCol),
         posexplode(cmsCells(col(itemCol), d, w, salt)).as(Seq("row", "cell")))
-    expanded.join(broadcast(sketch), Seq("row", "cell"), "left")
+    expanded.join(sketch, Seq("row", "cell"), "left")
       .groupBy(col(itemCol))
       .agg(min(coalesce(col("c"), lit(0L))).as("est_count"))
   }
@@ -283,7 +283,7 @@ object Sketch {
     // feeds TWO consumers (the exact semi-join and the final join) —
     // materialize so the corpus pipeline runs once
     val winners = topK.select(col("tok"), col("est_count")).transform(Checkpoint.materialize)
-    val exact = toks.join(broadcast(winners.select(col("tok"))), Seq("tok"))
+    val exact = toks.join(winners.select(col("tok")), Seq("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("exact_count"))
     winners.join(exact, Seq("tok"), "left")
       .select(col("tok"), col("est_count"),
@@ -374,7 +374,7 @@ object Sketch {
     // ceil(q·n) runs on IEEE doubles in both engines (the q95 lesson: the
     // oracle CASTs its q literal to DOUBLE); exactly one bucket satisfies
     // cum >= target > cum − c
-    cum.crossJoin(broadcast(qs.toDF("q")))
+    cum.crossJoin(qs.toDF("q"))
       .withColumn("__t", greatest(lit(1L),
         ceil(col("q") * col("__n").cast("double")).cast("long")))
       .filter(col("__cum") >= col("__t") &&
@@ -411,7 +411,7 @@ object Sketch {
       min(when(col("q") === lit(loQ), col("est_lo"))).as("lo_cut"),
       min(when(col("q") === lit(hiQ), col("est_hi"))).as("hi_cut"))
     df.withColumn("n_tokens", v)
-      .join(broadcast(cuts), Seq(groupCol))
+      .join(Broadcast.small(cuts), Seq(groupCol))
       .filter(col("n_tokens") >= col("lo_cut") &&
         col("n_tokens") <= col("hi_cut"))
   }
@@ -457,7 +457,7 @@ object Sketch {
         * lit(4294967296.0)).cast("long").as("__t"): _*)
     val hv = md5(concat(itemCol.cast("string"), lit(":" + salt)))
     val surv = df.select(groupCols.map(col) :+ hv.as("hv"): _*)
-      .join(broadcast(thr), groupCols)
+      .join(thr, groupCols)
       .filter(conv(substring(col("hv"), 1, 8), 16, 10).cast("long") < col("__t"))
       .select(groupCols.map(col) :+ col("hv"): _*)
       .distinct()
@@ -487,7 +487,7 @@ object Sketch {
   def bottomKResemblance(sk: DataFrame, groupCol: String, k: Int): DataFrame = {
     val gs = sk.select(col(groupCol).as("g")).distinct()
     val pairs = gs.select(col("g").as("src_a"))
-      .crossJoin(broadcast(gs.select(col("g").as("src_b"))))
+      .crossJoin(gs.select(col("g").as("src_b")))
       .filter(col("src_a") < col("src_b"))
     // BOTH sides pair-scoped before the union rank (the q147 discipline)
     val a = pairs.join(
@@ -672,7 +672,7 @@ object Sketch {
       .select(col("est_distinct").as("est_vocab_new"))
     val srcs = estSrc.select(col(srcCol))
     val uni = srcs
-      .crossJoin(broadcast(newHll.select(col("reg"), col("maxr").as("__mn"))))
+      .crossJoin(Broadcast.small(newHll.select(col("reg"), col("maxr").as("__mn"))))
       .join(hllSk.withColumnRenamed("maxr", "__ms"), Seq(srcCol, "reg"),
         "full_outer")
       .select(col(srcCol), col("reg"),
@@ -681,7 +681,7 @@ object Sketch {
     val estUni = hllEstimate(uni, Seq(srcCol), m)
       .select(col(srcCol), col("est_distinct").as("__eu"))
     val vocab = estSrc.join(estUni, Seq(srcCol))
-      .crossJoin(broadcast(estNew))
+      .crossJoin(Broadcast.small(estNew))
       .select(col(srcCol), col("est_vocab_src"), col("est_vocab_new"),
         round(col("est_vocab_src") + col("est_vocab_new") - col("__eu"), 6)
           .as("est_inter"))
@@ -705,7 +705,7 @@ object Sketch {
       .distinct().orderBy(col("hv")).limit(k)
       .transform(Checkpoint.materialize)
     val pairU = srcs
-      .crossJoin(broadcast(newBk.select(col("hv"), lit(1L).as("__inb"))))
+      .crossJoin(Broadcast.small(newBk.select(col("hv"), lit(1L).as("__inb"))))
       .join(bkSk.select(col(srcCol), col("hv"), lit(1L).as("__ina")),
         Seq(srcCol, "hv"), "full_outer")
       .select(col(srcCol), col("hv"),

@@ -177,7 +177,7 @@ object Unigram {
       .select(col("w"), col("__c.st").as("st"), col("__c.en").as("en"),
         expr("substring(w, st + 1, en - st)").as("piece"))
     val pieces = model.toDF("piece", "s")
-    val edges = cands.join(broadcast(pieces), Seq("piece"), "left")
+    val edges = cands.join(pieces, Seq("piece"), "left")
       .filter(col("s").isNotNull || col("en") - col("st") === 1)
       .select(col("w"), col("en"), col("st"),
         coalesce(col("s"), lit(UnkScore)).as("sc"))

@@ -202,7 +202,7 @@ object Shaping {
         val w = org.apache.spark.sql.expressions.Window
           .orderBy(ft.canonicalSortKeys(): _*)
         val ranked = ft.df.withColumn("__fb_rank", row_number().over(w))
-        val joined = ranked.join(broadcast(lookup), Seq("__fb_rank")).drop("__fb_rank")
+        val joined = ranked.join(lookup, Seq("__fb_rank")).drop("__fb_rank")
         val (before, after) = ft.meta.indexLevels.splitAt(pos)
         FlatTable(joined, ft.meta.copy(indexLevels = (before :+ name) ++ after))
       case Axis.Cols =>
@@ -279,7 +279,7 @@ object Shaping {
     * aggregated once and broadcast — no driver-side collect, scale-safe. */
   def offsetDateField(df: DataFrame, dateField: String, yearField: String): DataFrame = {
     val maxY = df.agg(max(col(yearField)).cast("int").as("__fb_max_year"))
-    df.crossJoin(broadcast(maxY))
+    df.crossJoin(maxY)
       .withColumn(dateField,
         add_months(col(dateField),
           (col("__fb_max_year") - col(yearField).cast("int")) * 12))

@@ -977,6 +977,41 @@ class ExtSpec extends AnyFunSuite {
     assert(Multimodal.decodeFrames(Multimodal.syntheticGif(3L, 8, 6, 2)).nonEmpty)
   }
 
+  test("an image header declaring more than the pixel budget drops the row undecoded") {
+    // an 8-bit gray PNG of side x side zero pixels, its rows deflated as a
+    // stream so the test never holds the image: 8200 x 8200 is ~70 KB of
+    // bytes declaring 67 M pixels, just over the budget
+    def grayPng(side: Int): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bos)
+      def chunk(kind: String, data: Array[Byte]): Unit = {
+        val crc = new java.util.zip.CRC32
+        crc.update(kind.getBytes("US-ASCII")); crc.update(data)
+        out.writeInt(data.length); out.writeBytes(kind); out.write(data)
+        out.writeInt(crc.getValue.toInt)
+      }
+      val idat = new java.io.ByteArrayOutputStream()
+      val z = new java.util.zip.DeflaterOutputStream(idat)
+      val row = new Array[Byte](side + 1) // filter type 0, then the samples
+      (0 until side).foreach(_ => z.write(row))
+      z.close()
+      out.write(Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte))
+      chunk("IHDR", java.nio.ByteBuffer.allocate(13).putInt(side).putInt(side)
+        .put(Array[Byte](8, 0, 0, 0, 0)).array()) // 8-bit gray, no interlace
+      chunk("IDAT", idat.toByteArray)
+      chunk("IEND", Array.emptyByteArray)
+      bos.toByteArray
+    }
+    val huge = grayPng(8200)
+    assert(8200L * 8200 > Multimodal.MaxImagePixels && huge.length < 200000)
+    assert(Multimodal.decodeImage(huge).isEmpty)
+    assert(Multimodal.decodeFrames(huge).isEmpty)
+    // the same builder under the budget decodes: the drop is the budget's
+    val Some((w, h, px)) = Multimodal.decodeImage(grayPng(4))
+    assert(w == 4 && h == 4 && px.forall(_ == 0xFF000000))
+    assert(Multimodal.decodeFrames(grayPng(4)).map(_.size).contains(1))
+  }
+
   test("cross-container: the same clip as GIF and MJPEG-AVI embeds near-identically") {
     import spark.implicits._
     // patternGif and syntheticMjpegAvi share the analytic flat-cell frame
@@ -3023,6 +3058,14 @@ class ExtSpec extends AnyFunSuite {
     // dim 8 is not divisible by m = 3
     intercept[IllegalArgumentException] {
       Quantize.pqCodebooks(df, "vec_id", "embedding", m = 3, ksub = 4)
+    }
+    // an empty train slice is a stated error on both codebook builders
+    for (iters <- Seq(0, 2)) {
+      val e = intercept[IllegalArgumentException] {
+        Quantize.pqCodebooksKmeans(df.limit(0), "vec_id", "embedding",
+          m = 4, ksub = 4, iters = iters)
+      }
+      assert(e.getMessage.contains("non-empty train slice"))
     }
   }
 
@@ -6577,5 +6620,46 @@ class ExtSpec extends AnyFunSuite {
     assert(r3.values.sum > 0.9 && r3.values.sum <= 1.000001)
     assert(r3 == Urls.hostRank(g.repartition(5), iters = 3).collect()
       .map(r => r.getString(0) -> r.getDouble(2)).toMap)
+  }
+
+  test("library broadcasts follow spark.sql.autoBroadcastJoinThreshold in bytes") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastNestedLoopJoinExec}
+    val vecs = Seq((1L, Array(1f, 0f)), (2L, Array(3f, 4f)),
+      (3L, Array(0f, 2f)), (4L, Array(6f, 8f))).toDF("id", "v")
+    val scored = Seq((1L, Some(0.5)), (2L, Some(0.5)), (3L, Some(1.5)),
+      (4L, None), (5L, Some(2.5))).toDF("id", "nll_mean")
+    // each operator's size-routed join, named by its join type: the hot-gram
+    // anti-join (maxDocFreq = 1 makes every shared shingle hot), the norm
+    // band's semi-join and the tercile labels' outer join
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "LeftAnti" -> (() => Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
+        minJaccard = 0.4, maxDocFreq = Some(1))),
+      "LeftSemi" -> (() => Similarity.filterByNormBand(vecs, "id", "v",
+        dropLowFrac = 0.25)),
+      "LeftOuter" -> (() => Perplexity.perplexityBuckets(scored)))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val atDefault = ops.map { case (jt, op) =>
+      val df = op()
+      val plan = df.queryExecution.sparkPlan
+      assert(plan.collect { case j: BroadcastHashJoinExec => j.joinType.toString }
+        .contains(jt), s"$jt join not broadcast at the default threshold:\n$plan")
+      rows(df)
+    }
+    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16")
+      ops.zip(atDefault).foreach { case ((jt, op), expected) =>
+        val df = op()
+        val plan = df.queryExecution.sparkPlan
+        val bc = plan.collect {
+          case j: BroadcastHashJoinExec => j
+          case j: BroadcastNestedLoopJoinExec => j
+        }
+        assert(bc.isEmpty, s"$jt: broadcast above a 16-byte threshold:\n$plan")
+        assert(rows(df) == expected, s"$jt: rows changed with the threshold")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
   }
 }

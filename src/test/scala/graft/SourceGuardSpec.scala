@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level gates for design rules no plan or result check can see:
   * every lineage cut in `ext`, the query registry and streaming goes
   * through the one checkpoint policy ([[graft.ext.Checkpoint.materialize]]),
+  * every broadcast hint through the one size rule
+  * ([[graft.ext.Broadcast.small]]),
   * the graft SQL functions are wired in one place ([[GraftExtensions]]),
   * and no engine code spawns processes. */
 class SourceGuardSpec extends AnyFunSuite {
@@ -46,6 +48,13 @@ class SourceGuardSpec extends AnyFunSuite {
     val found = hits(files, """localCheckpoint\(|\.checkpoint\(|CheckpointStrategy""")
       .filterNot(h => cutAllowList.keys.exists { case (file, code) =>
         h.contains(s"/$file:") && h.endsWith(code) })
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("every broadcast hint goes through Broadcast.small") {
+    val found = hits(
+      sources(main).filterNot(_.getFileName.toString == "Broadcast.scala"),
+      """broadcast\(|hint\("broadcast""")
     assert(found.isEmpty, found.mkString("\n"))
   }
 
