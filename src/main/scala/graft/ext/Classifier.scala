@@ -1,8 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{Decimal, DecimalType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Trainable model-based quality classifier — the fastText-recipe linear
   * model (Joulin et al. 2016, "Bag of Tricks for Efficient Text
@@ -12,27 +14,30 @@ import org.apache.spark.sql.types.DecimalType
   * hashed uni+bigram bag ([[Dsir.hashedGramBuckets]], shared with DSIR so
   * "feature" means the same thing across the scoring stack), L1-normalized
   * per document; the model is logistic regression trained by full-batch
-  * gradient descent as a sequence of Spark aggregates.
+  * gradient descent.
   *
   * Scale shape: TRAINING runs on the caller's labeled slice (curation
-  * practice: thousands-to-millions of rows, not the corpus) — per iteration
-  * one (doc)-keyed aggregate for margins and one (bucket)-keyed aggregate
-  * for the gradient, collecting only the B-bounded gradient (B = 4096
-  * default). SCORING is corpus-scale and cheap: explode grams, ONE
-  * broadcast join against the B-row weight table, one skinny (id, bucket)
-  * fold — the corpus never shuffles by anything wider than its id.
+  * practice: thousands-to-millions of rows, not the corpus) — the feature
+  * rows are cut once, hash-partitioned by document, and each iteration is
+  * ONE Spark job over that cut: the weights go out as a broadcast, each
+  * partition returns its B-bounded gradient sums (B = 4096 default).
+  * SCORING is corpus-scale and cheap: explode grams, read each bucket's
+  * weight from a broadcast, one skinny (id, bucket) fold — the corpus
+  * never shuffles by anything wider than its id. Neither path puts the
+  * weight vector into a query plan.
   *
   * Determinism: a naive distributed gradient sums doubles in shuffle order
   * and drifts between runs/partitionings, compounding over iterations.
-  * Here every cross-row sum (margins, gradients, scoring dots) is cast to
-  * DECIMAL(38,18) first — decimal addition is exact, hence
+  * Here every cross-row sum (margins, gradients, scoring dots) is taken
+  * over DECIMAL(38,18) terms — decimal addition is exact, hence
   * order-independent — so training and scoring are bit-reproducible under
   * any partitioning (spec-asserted). Per-row float math (σ, the products)
   * stays IEEE-deterministic given identical inputs.
   *
-  * No DuckDB oracle: the training loop is iterative and engine-side by
-  * nature (the q91-Excel precedent — spec-pinned where SQL replay is
-  * impossible); the driver records the rows-only check for q111.
+  * Oracle: training is iterative and engine-side by nature, so q111 and
+  * q146 freeze the trained weights through `OracleAux` and the DuckDB
+  * oracle replays the scoring pass against them; GD determinism and class
+  * separation are spec-pinned.
   */
 object Classifier {
 
@@ -42,7 +47,7 @@ object Classifier {
   final case class LinearModel(weights: Array[Double], bias: Double,
                                buckets: Int, salt: String)
 
-  private val Dec = DecimalType(38, 18)
+  private[graft] val Dec = DecimalType(38, 18)
 
   /** The bias feature's value. Text features are L1-normalized (each
     * ~1/grams ≈ 0.01–0.1), so a bias feature at 1.0 gets a ~20× larger
@@ -51,7 +56,7 @@ object Classifier {
     * through bias −15 before converging). Scaling the bias into the same
     * range as the other features conditions the problem instead of
     * requiring a tiny global rate. */
-  private val BiasX = 0.05
+  private[graft] val BiasX = 0.05
 
   /** L1-normalized hashed-feature rows of a labeled slice:
     * (__key, __y, bucket, __x) with __x = bucket count / total grams — an
@@ -59,7 +64,7 @@ object Classifier {
     * __x = [[BiasX]]) per document: the BIAS as a feature, so one weight
     * table and one gradient aggregate cover intercept and coefficients
     * alike (the reported intercept is w₋₁·BiasX). */
-  private def featureRows(df: DataFrame, idCol: String, textCol: String,
+  private[graft] def featureRows(df: DataFrame, idCol: String, textCol: String,
                           y: Double, buckets: Int, salt: String): DataFrame = {
     val keyed = df.select(
       concat(lit(f"$y%.1f:"), col(idCol).cast("string")).as("__key"),
@@ -87,21 +92,21 @@ object Classifier {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(lr > 0.0, s"lr must be positive, got $lr")
-    // the feature table feeds every iteration twice — materialize once,
-    // HASH-PARTITIONED BY __key: the per-iteration margin groupBy(__key)
-    // and the err⋈feats equi-join on __key then both reuse the checkpoint's
-    // partitioning (zero exchanges inside the GD loop; only the ≤ B+1-row
-    // bucket gradient aggregate shuffles). Training slices are labeled
-    // samples (thousands of rows), so a handful of partitions minimizes
-    // per-iteration task-scheduling overhead; at a genuinely large slice,
-    // raise spark.sql.shuffle.partitions instead.
+    // the feature table feeds every iteration — materialize once,
+    // HASH-PARTITIONED BY __key: every row of one document then sits in ONE
+    // partition, which is what lets each iteration finish a document's
+    // margin inside its partition (see partitionGradient). Training slices
+    // are labeled samples (thousands of rows), so a handful of partitions
+    // (an eighth of the default parallelism, at least 2) minimizes
+    // per-iteration task-scheduling overhead.
+    val spark = pos.sparkSession
     val feats = featureRows(pos, idCol, textCol, 1.0, buckets, salt)
       .unionAll(featureRows(neg, idCol, textCol, 0.0, buckets, salt))
-      .repartition(math.max(2, pos.sparkSession.sparkContext.defaultParallelism / 8),
+      .repartition(math.max(2, spark.sparkContext.defaultParallelism / 8),
         col("__key"))
       .transform(Checkpoint.materialize)
-    val n = feats.select(countDistinct(col("__key"))).head().getLong(0)
-    require(n > 0, "training slices produced no feature rows")
+    val rows = feats.queryExecution.toRdd
+    val ansi = spark.sessionState.conf.ansiEnabled
 
     // index 0 is the bias (feature bucket −1); coefficients shift by one
     var w = new Array[Double](buckets + 1)
@@ -109,50 +114,109 @@ object Classifier {
       // linearly decaying rate (the fastText schedule): high early progress,
       // damped endgame so a large base rate cannot oscillate forever
       val lrT = lr * (1.0 - (it - 1).toDouble / iters)
-      // OPT r20: the weights are DRIVER state — ship them as one array
-      // literal and look up per row (element_at is codegen'd), instead of
-      // parallelize-ing a (B+1)-row DataFrame and broadcast-joining it
-      // EVERY iteration (one RDD job + one broadcast build per iteration,
-      // pure fixed overhead on the GD loop). Same doubles, same multiply,
-      // bit-identical margins. bucket ∈ [−1, B−1] always resolves (index
-      // = bucket + 2, 1-based).
-      val wLit = lit(w)
-      // margins (bias rides as bucket −1): one (doc)-keyed exact aggregate;
-      // σ and the residual are per-row math on the exact sum
-      val err = feats
-        .groupBy(col("__key"), col("__y"))
-        .agg(sum((col("__x") *
-          element_at(wLit, col("bucket") + 2)).cast(Dec)).as("__m"))
-        .select(col("__key"),
-          (lit(1.0) / (lit(1.0) + exp(-col("__m").cast("double")))
-            - col("__y")).as("__e"))
-      // gradient: one (bucket)-keyed exact aggregate, ≤ B+1 rows collected
-      // — the bucket −1 row IS the bias gradient
-      val grads = feats.join(err, Seq("__key"))
-        .groupBy(col("bucket"))
-        .agg(sum((col("__e") * col("__x")).cast(Dec)).as("__g"))
-        .collect().map(r => r.getInt(0) ->
-          r.getDecimal(1).doubleValue()).toMap
+      // ONE job per iteration and no SQL execution: the weights travel as a
+      // broadcast, never as a plan literal, and each partition returns its
+      // exact per-bucket gradient sums; merging them is exact addition
+      val bw = spark.sparkContext.broadcast(w)
+      val (n, sums) = try rows.zipPartitions(rows) { (pass1, pass2) =>
+          Iterator.single(partitionGradient(pass1, pass2, bw.value, ansi))
+        }.reduce { case ((na, ga), (nb, gb)) =>
+          (na + nb, Array.tabulate(ga.length)(b => plus(ga(b), gb(b))))
+        }
+        finally bw.destroy()
+      // keys are partition-local, so the per-partition key counts add up
+      // to the distinct-document count without a job of their own
+      require(n > 0, "training slices produced no feature rows")
+      val grads = sums.map(g => Option(exact(g, ansi)).fold(0.0)(_.toDouble))
       w = Array.tabulate(buckets + 1)(b =>
         // no L2 on the intercept, the standard convention
-        w(b) - lrT * (grads.getOrElse(b - 1, 0.0) / n +
+        w(b) - lrT * (grads(b) / n +
           (if (b == 0) 0.0 else l2 * w(b))))
     }
     LinearModel(w.drop(1), w(0) * BiasX, buckets, salt)
   }
 
+  /** One document's running margin, then its residual e = σ(margin) − y. */
+  private final class Doc(val y: Double) {
+    var margin: Decimal = null
+    var e: java.lang.Double = null
+  }
+
+  /** One GD iteration over one partition of the `__key`-partitioned
+    * feature cut, read twice (columns __key, __y, bucket, __x). The first
+    * read sums each document's margin Σ x·w(bucket + 1); that sum is
+    * complete inside the partition only because the cut put every row of a
+    * key into one partition. The second read sums e·x per bucket. Returns
+    * the number of documents and the per-bucket sums indexed bucket + 1
+    * (null: no term).
+    *
+    * This is the DataFrame formulation `groupBy(__key)` → σ →
+    * `join(err, __key)` → `groupBy(bucket)`, term for term: each term is
+    * the exact DECIMAL(38,18) value of Spark's `CAST(x·w AS
+    * DECIMAL(38,18))`, σ uses `StrictMath.exp` like Spark's `exp`, null
+    * terms are skipped like SQL's `sum`, and a null key joins nothing. */
+  private def partitionGradient(pass1: Iterator[InternalRow],
+                                pass2: Iterator[InternalRow], w: Array[Double],
+                                ansi: Boolean): (Long, Array[Decimal]) = {
+    val docs = new java.util.HashMap[UTF8String, Doc]
+    pass1.foreach { r =>
+      if (!r.isNullAt(0)) {
+        val k = r.getUTF8String(0)
+        var d = docs.get(k)
+        if (d == null) {
+          d = new Doc(r.getDouble(1))
+          docs.put(k.clone(), d) // the row's bytes are reused
+        }
+        d.margin = plus(d.margin, term(r.getDouble(3) * w(r.getInt(2) + 1), ansi))
+      }
+    }
+    docs.values.forEach { d =>
+      val m = exact(d.margin, ansi)
+      if (m != null) d.e = 1.0 / (1.0 + StrictMath.exp(-m.toDouble)) - d.y
+    }
+    val grads = new Array[Decimal](w.length)
+    pass2.foreach { r =>
+      if (!r.isNullAt(0)) {
+        val e = docs.get(r.getUTF8String(0)).e
+        if (e != null) {
+          val b = r.getInt(2) + 1
+          grads(b) = plus(grads(b), term(e * r.getDouble(3), ansi))
+        }
+      }
+    }
+    (docs.size.toLong, grads)
+  }
+
+  /** `CAST(d AS DECIMAL(38,18))` as Spark evaluates it: HALF_UP from the
+    * shortest decimal form of `d`; NaN, ±Inf and overflow raise an error
+    * under ANSI and give null otherwise. */
+  private def term(d: Double, ansi: Boolean): Decimal =
+    if (!d.isNaN && !d.isInfinite) exact(Decimal(d), ansi)
+    else if (ansi) throw new ArithmeticException(s"cannot cast $d to $Dec")
+    else null
+
+  /** `d` set to DECIMAL(38,18) in place, like the result of Spark's cast or
+    * `sum`: past its range, an error under ANSI and null otherwise. */
+  private def exact(d: Decimal, ansi: Boolean): Decimal =
+    if (d == null || d.changePrecision(Dec.precision, Dec.scale)) d
+    else if (ansi) throw new ArithmeticException(s"$d does not fit $Dec")
+    else null
+
+  /** SQL `sum` of two partial sums: exact, and null only when both are. */
+  private def plus(a: Decimal, b: Decimal): Decimal =
+    if (a == null) b else if (b == null) a else a + b
+
   /** Score a batch under a trained model: appends `clf_prob` (σ of the
-    * linear score, 6 dp) and `clf_keep` (prob ≥ `threshold`). One broadcast
-    * join + one id-keyed exact fold; corpus-scale safe. */
+    * linear score, 6 dp) and `clf_keep` (prob ≥ `threshold`). The weights
+    * reach the executors as one broadcast read by bucket, so the plan stays
+    * the same size whatever the model; one id-keyed exact fold;
+    * corpus-scale safe. */
   def score(df: DataFrame, idCol: String, textCol: String, model: LinearModel,
             threshold: Double = 0.5): DataFrame = {
-    // OPT r20: the weight table is model state — an array literal +
-    // codegen'd element_at replaces the parallelize + broadcast join (the
-    // train-loop change, applied to the corpus-scale scoring pass: the
-    // per-(doc, bucket) rows never join at all now). Same doubles, same
-    // multiply — bit-identical probabilities. bucket ∈ [0, B−1] always
-    // resolves (index = bucket + 1).
-    val wLit = lit(model.weights)
+    // the broadcast lives as long as the returned plan: Spark's
+    // ContextCleaner removes it once the plan is unreachable
+    val bw = df.sparkSession.sparkContext.broadcast(model.weights)
+    val weight = udf((bucket: Int) => bw.value(bucket))
     val feats = df.select(col(idCol).as("__id"),
         TextStats.pinnedCol(Dsir.hashedGramBuckets(
           col(textCol), model.buckets, model.salt)).as("__b"))
@@ -163,8 +227,7 @@ object Classifier {
         (col("__c").cast("double") / col("__n").cast("double")).as("__x"))
     val scored = feats
       .groupBy(col("__id"))
-      .agg(sum((col("__x") *
-        element_at(wLit, col("bucket") + 1)).cast(Dec)).as("__m"))
+      .agg(sum((col("__x") * weight(col("bucket"))).cast(Dec)).as("__m"))
       .select(col("__id"),
         round(lit(1.0) / (lit(1.0) +
           exp(-(col("__m").cast("double") + lit(model.bias)))), 6).as("clf_prob"))

@@ -140,6 +140,11 @@ object Multimodal {
     * it: an OutOfMemoryError is an Error no NonFatal catch swallows. */
   private[graft] val MaxImagePixels: Long = 64L * 1024 * 1024
 
+  /** The most pixels one container's decoded frames may hold together
+    * (256 M = 1 GiB packed). Every multi-frame decoder sums the frames'
+    * DECLARED sizes before it decodes one, and drops the row past it. */
+  private[graft] val MaxContainerPixels: Long = 256L * 1024 * 1024
+
   /** `f` over the first ImageIO reader that claims `in` (forward-only
     * unless `seekable`, as `ImageIO.read` sets it); None if none does. */
   private def withReader[T](in: javax.imageio.stream.ImageInputStream,
@@ -154,9 +159,24 @@ object Multimodal {
     }
   }
 
+  /** The pixels image `i`'s header declares (parses the header only). */
+  private def declared(reader: javax.imageio.ImageReader, i: Int): Long =
+    reader.getWidth(i).toLong * reader.getHeight(i)
+
   /** Image `i`'s header declares at most [[MaxImagePixels]]. */
   private def fits(reader: javax.imageio.ImageReader, i: Int): Boolean =
-    reader.getWidth(i).toLong * reader.getHeight(i) <= MaxImagePixels
+    declared(reader, i) <= MaxImagePixels
+
+  /** Frames of these declared sizes fit both budgets: each at most
+    * [[MaxImagePixels]], together at most [[MaxContainerPixels]]. Stops at
+    * the first frame past either, so no later header is read. */
+  private def withinBudget(frames: Iterator[Long]): Boolean = {
+    var total = 0L
+    frames.forall { p =>
+      total += p // no overflow: total <= 2^28 and p <= Int.MaxValue^2 here
+      p <= MaxImagePixels && total <= MaxContainerPixels
+    }
+  }
 
   private def pixels(img: java.awt.image.BufferedImage): (Int, Int, Array[Int]) = {
     val (w, h) = (img.getWidth, img.getHeight)
@@ -442,7 +462,9 @@ object Multimodal {
     * (`ImageReader.getNumImages`/`read(i)` — the JDK's GIF reader returns
     * every image in an animated GIF): container bytes → per-frame
     * (width, height, packed 0xRRGGBB pixels). None for undecodable
-    * payloads — the same drop-the-row contract as [[decodeImage]].
+    * payloads — the same drop-the-row contract as [[decodeImage]] — and for
+    * containers whose frame headers declare more than [[MaxContainerPixels]]
+    * together (checked before any frame is decoded).
     *
     * GIF frames are COMPOSITED onto the logical screen: wild animated GIFs
     * commonly encode later frames as partial deltas drawn at an offset (a
@@ -465,7 +487,7 @@ object Multimodal {
         if (n <= 0) None
         else if (reader.getFormatName.equalsIgnoreCase("gif"))
           Some(gifComposited(reader, n))
-        else if ((0 until n).forall(fits(reader, _)))
+        else if (withinBudget((0 until n).iterator.map(declared(reader, _))))
           Some((0 until n).map(i => pixels(reader.read(i))))
         else None
       }
@@ -492,9 +514,9 @@ object Multimodal {
     * OutOfMemoryError is an Error the NonFatal catch in [[decodeFrames]]
     * deliberately does NOT swallow). The RETAINED footprint — n output
     * frames plus up to two transient canvas snapshots for
-    * `restoreToPrevious`, each cw×ch ints — is capped at 256 M pixels
-    * (1 GiB packed) total. Either guard throws; [[decodeFrames]] maps that
-    * to None: drop the row, never the task. */
+    * `restoreToPrevious`, each cw×ch ints — is capped at
+    * [[MaxContainerPixels]] total. Either guard throws; [[decodeFrames]]
+    * maps that to None: drop the row, never the task. */
   private def gifComposited(reader: javax.imageio.ImageReader,
                             n: Int): IndexedSeq[(Int, Int, Array[Int])] = {
     import javax.imageio.metadata.IIOMetadataNode
@@ -534,9 +556,9 @@ object Multimodal {
     // task, not the row (see scaladoc); every frame lies inside the canvas
     if (cw.toLong * ch > MaxImagePixels)
       throw new java.io.IOException(s"GIF canvas $cw x $ch exceeds $MaxImagePixels pixels")
-    if (n.toLong * cw * ch > 256L * 1024 * 1024)
+    if (n.toLong * cw * ch > MaxContainerPixels)
       throw new java.io.IOException(
-        s"GIF composited output $n x $cw x $ch exceeds 256M pixels")
+        s"GIF composited output $n x $cw x $ch exceeds $MaxContainerPixels pixels")
     val canvas = new java.awt.image.BufferedImage(cw, ch,
       java.awt.image.BufferedImage.TYPE_INT_ARGB)
     val g = canvas.createGraphics()
@@ -737,12 +759,22 @@ object Multimodal {
         case (sn, fo, flen, compressed) if sn == boundStream =>
           (fo, flen, compressed)
       }
+      def frameIn(fo: Int, flen: Int) =
+        new javax.imageio.stream.MemoryCacheImageInputStream(
+          new java.io.ByteArrayInputStream(bytes, fo, flen))
+      // a coded frame declares its own size in its JPEG header, which may
+      // differ from the stream's; an unreadable header is over budget
+      def frameSize(fo: Int, flen: Int, coded: Boolean): Long =
+        if (!coded) vw.toLong * h
+        else withReader(frameIn(fo, flen), seekable = false)(r =>
+          Some(declared(r, 0))).getOrElse(MaxImagePixels + 1)
       if (!haveFmt || mine.isEmpty || vw <= 0 || h == 0 ||
-          vw.toLong * h > MaxImagePixels) None
+          vw.toLong * h > MaxImagePixels ||
+          !withinBudget(mine.iterator.map { case (fo, flen, compressed) =>
+            frameSize(fo, flen, compressed || mjpg) })) None
       else Some(mine.map { case (fo, flen, compressed) =>
         if (compressed || mjpg)
-          readFirst(new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(bytes, fo, flen)))
+          readFirst(frameIn(fo, flen))
             .getOrElse(throw new java.io.IOException("undecodable or oversized frame"))
         else {
           if (bits != 24) throw new java.io.IOException(s"DIB depth $bits")

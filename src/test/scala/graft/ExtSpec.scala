@@ -1012,6 +1012,66 @@ class ExtSpec extends AnyFunSuite {
     assert(Multimodal.decodeFrames(grayPng(4)).map(_.size).contains(1))
   }
 
+  test("frames that each fit but together pass the container budget drop the row undecoded") {
+    // each frame header below declares 8000 x 8000 = 64 M pixels, under the
+    // per-frame budget; five of them declare 320 M, over the container's
+    val (side, n) = (8000, 5)
+    assert(side.toLong * side <= Multimodal.MaxImagePixels &&
+      n.toLong * side * side > Multimodal.MaxContainerPixels)
+    def u16be(b: Array[Byte], o: Int) = ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
+    // MJPEG AVI: rewrite every frame's JPEG SOF0 height and width
+    val avi = Multimodal.syntheticMjpegAvi(1L, 16, 16, nFrames = n)
+    val patched = avi.clone()
+    var frames = 0
+    for (i <- 0 until avi.length - 3
+         if u16be(avi, i) == 0xFFD8 && (avi(i + 2) & 0xFF) == 0xFF) {
+      var o = i + 2 // segment markers up to the frame header
+      while (u16be(avi, o) != 0xFFC0) o += 2 + u16be(avi, o + 2)
+      Seq(o + 5, o + 7).foreach { f =>
+        patched(f) = (side >> 8).toByte; patched(f + 1) = side.toByte }
+      frames += 1
+    }
+    assert(frames == n)
+    // multi-page TIFF (ImageIO's non-GIF sequence branch): rewrite every
+    // IFD's ImageWidth (256) and ImageLength (257) entries
+    val tiff = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("tiff").next()
+      wr.setOutput(ios)
+      wr.prepareWriteSequence(null)
+      (0 until n).foreach(_ => wr.writeToSequence(new javax.imageio.IIOImage(
+        new java.awt.image.BufferedImage(16, 16,
+          java.awt.image.BufferedImage.TYPE_BYTE_GRAY), null, null), null))
+      wr.endWriteSequence(); ios.close(); wr.dispose()
+      val b = java.nio.ByteBuffer.wrap(bos.toByteArray)
+      if (b.get(0) == 'I') b.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      var ifd = b.getInt(4)
+      while (ifd != 0) {
+        val entries = b.getShort(ifd) & 0xFFFF
+        for (e <- 0 until entries; at = ifd + 2 + 12 * e
+             if b.getShort(at) == 256 || b.getShort(at) == 257)
+          if (b.getShort(at + 2) == 3) b.putShort(at + 8, side.toShort)
+          else b.putInt(at + 8, side)
+        ifd = b.getInt(ifd + 2 + 12 * entries)
+      }
+      b.array()
+    }
+    // nothing is decoded: one 64 M-pixel frame alone allocates >= 256 MB
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val me = Thread.currentThread.getId
+    for (container <- Seq(patched, tiff)) {
+      val before = threads.getThreadAllocatedBytes(me)
+      val dropped = Multimodal.decodeFrames(container).isEmpty
+      val allocated = threads.getThreadAllocatedBytes(me) - before
+      assert(dropped && allocated < 32L * 1024 * 1024,
+        s"decoding allocated $allocated bytes")
+    }
+    // the unpatched AVI decodes every frame: the drop is the budget's
+    assert(Multimodal.decodeFrames(avi).map(_.size).contains(n))
+  }
+
   test("cross-container: the same clip as GIF and MJPEG-AVI embeds near-identically") {
     import spark.implicits._
     // patternGif and syntheticMjpegAvi share the analytic flat-cell frame
@@ -3623,6 +3683,104 @@ class ExtSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Classifier.train(pos, neg, "doc_id", "text", iters = 0)
     }
+  }
+
+  /** `Classifier.train` as a sequence of DataFrame aggregates — the
+    * formulation the RDD pass replaced, kept as its equivalence oracle: per
+    * iteration one (doc)-keyed exact margin aggregate over the weights as
+    * an array literal, and one (bucket)-keyed exact gradient aggregate,
+    * collected. */
+  private def trainDataFrames(pos: org.apache.spark.sql.DataFrame,
+                              neg: org.apache.spark.sql.DataFrame,
+                              buckets: Int, iters: Int, lr: Double,
+                              l2: Double): Classifier.LinearModel = {
+    val salt = "graft:clf"
+    val feats = Classifier.featureRows(pos, "doc_id", "text", 1.0, buckets, salt)
+      .unionAll(Classifier.featureRows(neg, "doc_id", "text", 0.0, buckets, salt))
+      .repartition(2, col("__key"))
+      .transform(Checkpoint.materialize)
+    val n = feats.select(countDistinct(col("__key"))).head().getLong(0)
+    var w = new Array[Double](buckets + 1)
+    for (it <- 1 to iters) {
+      val lrT = lr * (1.0 - (it - 1).toDouble / iters)
+      val err = feats
+        .groupBy(col("__key"), col("__y"))
+        .agg(sum((col("__x") *
+          element_at(lit(w), col("bucket") + 2)).cast(Classifier.Dec)).as("__m"))
+        .select(col("__key"),
+          (lit(1.0) / (lit(1.0) + exp(-col("__m").cast("double")))
+            - col("__y")).as("__e"))
+      val grads = feats.join(err, Seq("__key"))
+        .groupBy(col("bucket"))
+        .agg(sum((col("__e") * col("__x")).cast(Classifier.Dec)).as("__g"))
+        .collect().map(r => r.getInt(0) -> r.getDecimal(1).doubleValue()).toMap
+      w = Array.tabulate(buckets + 1)(b =>
+        w(b) - lrT * (grads.getOrElse(b - 1, 0.0) / n +
+          (if (b == 0) 0.0 else l2 * w(b))))
+    }
+    Classifier.LinearModel(w.drop(1), w(0) * Classifier.BiasX, buckets, salt)
+  }
+
+  /** 120 real documents split by the heuristic gate, q111's labeling. */
+  private def gateSlices = {
+    val docs = Tables.read(spark, "/root/testdata/sf0.001", "documents")
+      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(120)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      .toDF("doc_id", "text")
+    val pts = TextStats.qualityPoints(col("text"))
+    (docs.filter(pts === 10), docs.filter(pts < 10))
+  }
+
+  test("quality classifier: train equals its DataFrame formulation bit for bit") {
+    val small = (
+      Seq((0L, "the cat is on the mat"), (1L, "a report on the data"),
+        (2L, "the dog in the field")).toDF("doc_id", "text"),
+      Seq((0L, "el gato es un animal"), (1L, "las casas y los coches"),
+        (2L, "un dia por la playa"), (3L, "")).toDF("doc_id", "text"))
+    val (gatePos, gateNeg) = gateSlices
+    for (((pos, neg), buckets, iters, l2) <- Seq((small, 64, 6, 0.0),
+        ((gatePos.repartition(5), gateNeg.repartition(3)), 1 << 12, 5, 0.01))) {
+      val got = Classifier.train(pos, neg, "doc_id", "text", buckets = buckets,
+        iters = iters, lr = 300.0, l2 = l2)
+      val want = trainDataFrames(pos, neg, buckets, iters, 300.0, l2)
+      assert(got.bias == want.bias && got.weights.sameElements(want.weights),
+        s"buckets $buckets: bias ${got.bias} vs ${want.bias}")
+      assert(got.weights.exists(_ != 0.0))
+    }
+    // a term past DECIMAL(38,18) fails the fit under ANSI, as the cast does
+    val (pos, neg) = small
+    def arithmetic(t: Throwable): Boolean =
+      t != null && (t.isInstanceOf[ArithmeticException] || arithmetic(t.getCause))
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    for (fit <- Seq[() => Any](
+        () => Classifier.train(pos, neg, "doc_id", "text", buckets = 64,
+          iters = 2, lr = 1e30),
+        () => trainDataFrames(pos, neg, 64, 2, 1e30, 0.0)))
+      assert(arithmetic(intercept[Exception](fit())))
+  }
+
+  test("quality classifier: one Spark job per GD iteration, no model-sized plan") {
+    val (pos, neg) = gateSlices
+    var model: Classifier.LinearModel = null
+    def fit(k: Int): Unit =
+      model = Classifier.train(pos, neg, "doc_id", "text", iters = k, lr = 50.0)
+    fit(1) // warm: first-use planning and classes
+    for (k <- Seq(2, 6)) {
+      val jobs = TestSpark.jobsOf(fit(k))
+      assert(jobs <= k + 4, s"train(iters = $k) ran $jobs jobs")
+    }
+    val fit2 = TestSpark.executionsOf(fit(2))
+    val fit6 = TestSpark.executionsOf(fit(6))
+    assert(fit6.size == fit2.size,
+      s"SQL executions grow with iterations: ${fit2.size} vs ${fit6.size}")
+    assert(model.weights.count(_ != 0.0) > 100)
+    val scoring = TestSpark.executionsOf(
+      Classifier.score(pos.unionByName(neg), "doc_id", "text", model).collect())
+    assert(scoring.nonEmpty)
+    for (e <- fit2 ++ fit6 ++ scoring)
+      assert(e.physicalPlanDescription.length <= 64 * 1024,
+        s"execution ${e.executionId} (${e.description}) plans " +
+          s"${e.physicalPlanDescription.length} chars")
   }
 
   test("binary ANN: self-match first, decent recall with re-rank, frozen thresholds") {

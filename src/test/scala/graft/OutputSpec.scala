@@ -4,13 +4,12 @@ import java.nio.file.Files
 import java.util.zip.ZipFile
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Axis
 import graft.output.{DisplayConfig, Excel, FormatDef, FormatResolver, Formats, Html, TableSpec}
 import graft.testing.MakeTestDf
+import graft.TestSpark.jobsOf
 
 /** Presentation sinks: table-spec JSON shape (golden structure), smart format
   * resolution, the fluent display surface, HTML embedding, the
@@ -23,25 +22,6 @@ class OutputSpec extends AnyFunSuite {
 
   private def table = MakeTestDf(spark).addTotals(Axis.Both)
     .addPercentages(Axis.Cols, ndigits = 1)
-
-  private val JobTag = "graft.test.jobsOf"
-
-  /** Spark jobs that `body` submits from this thread: a listener counts
-    * the job starts carrying this call's tag, after the bus has drained. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(JobTag) == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(JobTag, tag)
-    try { body; ListenerBusDrain.drain(); n.get }
-    finally { sc.setLocalProperty(JobTag, null); sc.removeSparkListener(listener) }
-  }
 
   /** The data rows of sheet 1 of an .xlsx (header row skipped), each as
     * cell text by column index; a null value writes no cell. */

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every lineage cut in `ext`, the query registry and streaming goes
   * through the one checkpoint policy ([[graft.ext.Checkpoint.materialize]]),
   * every broadcast hint through the one size rule
-  * ([[graft.ext.Broadcast.small]]),
+  * ([[graft.ext.Broadcast.small]]; broadcast variables are listed with
+  * their reason),
   * the graft SQL functions are wired in one place ([[GraftExtensions]]),
   * and no engine code spawns processes. */
 class SourceGuardSpec extends AnyFunSuite {
@@ -39,22 +40,35 @@ class SourceGuardSpec extends AnyFunSuite {
       ("checkpointReleasable needs the checkpoint's RDD handle to release " +
         "each epoch's blocks, which Checkpoint.materialize does not return"))
 
+  /** Broadcast VARIABLES, which hint no join: (file, code) -> why. */
+  private val broadcastAllowList = Map(
+    ("Classifier.scala", "val bw = spark.sparkContext.broadcast(w)") ->
+      "the GD weights of one iteration, read by its RDD pass",
+    ("Classifier.scala",
+      "val bw = df.sparkSession.sparkContext.broadcast(model.weights)") ->
+      "the scoring weights, read by bucket in a UDF")
+
+  /** `found` without the hits an allow list names. */
+  private def unlisted(found: Seq[String],
+                       allowList: Map[(String, String), String]): Seq[String] =
+    found.filterNot(h => allowList.keys.exists { case (file, code) =>
+      h.contains(s"/$file:") && h.endsWith(code) })
+
   test("every ext lineage cut goes through Checkpoint.materialize") {
     val ext = sources(main.resolve("graft/ext"))
       .filterNot(_.getFileName.toString == "Checkpoint.scala")
     assert(ext.size > 10, s"ext sources not found under $main")
     val files = ext ++ sources(main.resolve("graft/streaming")) :+
       main.resolve("graft/ExtQueries.scala")
-    val found = hits(files, """localCheckpoint\(|\.checkpoint\(|CheckpointStrategy""")
-      .filterNot(h => cutAllowList.keys.exists { case (file, code) =>
-        h.contains(s"/$file:") && h.endsWith(code) })
+    val found = unlisted(hits(files,
+      """localCheckpoint\(|\.checkpoint\(|CheckpointStrategy"""), cutAllowList)
     assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("every broadcast hint goes through Broadcast.small") {
-    val found = hits(
+    val found = unlisted(hits(
       sources(main).filterNot(_.getFileName.toString == "Broadcast.scala"),
-      """broadcast\(|hint\("broadcast""")
+      """broadcast\(|hint\("broadcast"""), broadcastAllowList)
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -823,20 +823,28 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val stream = MemoryStream[(Long, String)]
     val got = scala.collection.concurrent.TrieMap[Long, Double]()
-    val q = stream.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.ext.Classifier.score(b, "doc_id", "text", model)
-          .select(col("doc_id"), col("clf_prob")).collect()
-          .foreach(r => got += r.getLong(0) -> r.getDouble(1))
-        ()
-      }.start()
-    try {
-      stream.addData(docs.take(40))
-      q.processAllAvailable()
-      stream.addData(docs.drop(40))
-      q.processAllAvailable()
-    } finally q.stop()
+    // every batch's scoring plan stays small: the weights are a broadcast,
+    // not a plan literal
+    val executions = TestSpark.executionsOf {
+      val q = stream.toDF().toDF("doc_id", "text").writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          graft.ext.Classifier.score(b, "doc_id", "text", model)
+            .select(col("doc_id"), col("clf_prob")).collect()
+            .foreach(r => got += r.getLong(0) -> r.getDouble(1))
+          ()
+        }.start()
+      try {
+        stream.addData(docs.take(40))
+        q.processAllAvailable()
+        stream.addData(docs.drop(40))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
     assert(got.toMap == want && got.size == 80)
+    assert(executions.nonEmpty)
+    for (e <- executions)
+      assert(e.physicalPlanDescription.length <= 64 * 1024,
+        s"execution ${e.executionId} plans ${e.physicalPlanDescription.length} chars")
   }
 
   test("crossEntropyGate: frozen two-model scoring admits the batch-selected set") {
